@@ -22,6 +22,10 @@ runs, so a FAIL from this gate is a plan regression until proven
 otherwise, not weather. Budget-file keys starting with "_" are
 protocol metadata, not budgets.
 
+FAILED KEYS: Bench lists every key that threw in either pass under
+"failed" in bench_queries.json. A thrown key's elapsed time is not its
+cost, so any failed key FAILS the gate regardless of its cpu reading.
+
 Queries with no budget (new this round) are listed as warnings; record
 them into the budget file at round close. Sub-0.2-CPU-s budgets are
 floored to 0.2 s before the 2x test: at that magnitude the measurement
@@ -71,7 +75,9 @@ def main():
     for n in stalls:
         print(f"  STALL {n}: wall={wall[n]:.2f}s vs cpu={cpu.get(n, 0.0):.2f}s "
               "(host pause suspected; informational)")
-    failures, warnings = [], []
+    failures = [f"  FAILED {n}: threw during the bench run"
+                for n in sorted(bench.get("failed", []))]
+    warnings = []
     for name, got in sorted(cpu.items()):
         if name not in budgets:
             warnings.append(f"  NEW   {name}: cpu={got:.2f}s (no budget recorded)")

@@ -1,36 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // keep saveAsTable (bucketed-join demo) out of the repo even when
-      // launched without build.sbt's javaOptions
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // favor fewer/larger post-shuffle partitions: at sf0.1 the bench
-      // floor is task-scheduling overhead, not data volume
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.graft(cpus.toInt, Sessions.fewerPartitions)
     spark.sparkContext.setLogLevel("WARN")
+    // A warmup step that throws is reported, not fatal: the timed
+    // passes below record that key's failure on their own.
+    def warmup(what: String)(body: => Unit): Unit =
+      try body
+      catch { case e: Throwable => System.err.println(s"[bench] warmup $what failed: $e") }
     // Untimed warmup: touch every table once so FileIndex listing,
     // parquet footer reads, and codegen warmup don't land on whichever
     // query the Map happens to run first (~4 s of one-time cost).
     graft.Tables.names.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
+      warmup(t)(spark.read.parquet(s"$sfDir/$t.parquet").count())
     }
     // ... and run one tiny query through the agg/join/window/codegen
     // machinery: Janino bootstrap, UnsafeRow infra, and JIT warmup are
     // per-JVM one-time costs (~5-15 CPU-s), not properties of whichever
     // query the Map happens to order first.
-    try {
+    warmup("codegen") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val n = spark.read.parquet(s"$sfDir/nation.parquet")
@@ -49,7 +39,7 @@ object Bench {
         .select(explode(expr(
           "filter(split(lower(text), ' '), x -> x <> '')")).as("token"))
         .groupBy("token").count().count()
-    } catch { case _: Throwable => }
+    }
     // The two side-effecting demos (bucketed-table DDL, partitioned
     // sink) write once per (session, sfDir) and skip the write on
     // repeat — run them here untimed so the timed pass below measures
@@ -74,14 +64,12 @@ object Bench {
         // fills the shared trained-merge memo (Pipeline5.learnedMerges)
         // consumed by both bpe_train and bpe_apply
         "q_text_bpe_train").foreach { k =>
-      try SparkEntry.queries(k)(spark, sfDir).count()
-      catch { case _: Throwable => }
+      warmup(k)(SparkEntry.queries(k)(spark, sfDir).count())
     }
     // ... and the shared KMeans target fit (memoized per (session,
     // sfDir)) used by the ML helper/evaluator/CV queries — a model
     // artifact like the bucketed layout, built once, untimed.
-    try graft.operators.VectorOps.warmSharedFits(spark, sfDir)
-    catch { case _: Throwable => }
+    warmup("shared fits")(graft.operators.VectorOps.warmSharedFits(spark, sfDir))
     // Wall-clock alone cannot grade this build: r3/r4 drove benches of
     // 853.9 s and 478.1 s on byte-identical code (whole-VM stalls, see
     // BASELINE.md). Record process-CPU per query alongside wall so a
@@ -96,10 +84,17 @@ object Bench {
           () => math.max(b.getProcessCpuTime, 0L)
         case _ => () => 0L
       }
+    // A key that throws in either pass is listed under "failed" (and
+    // fails cpu_gate.py): its elapsed time is not its cost.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def pass() = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val c0 = procCpu()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[bench] $name failed: $e")
+      }
       name -> ((System.nanoTime() - t0) / 1e9,
         math.max(procCpu() - c0, 0L) / 1e9)
     }
@@ -130,7 +125,8 @@ object Bench {
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","cpu_sec":$cpuTotal,""" +
         s""""cpu_protocol":"min_of_2_runs","cpus":$cpus,""" +
-        s""""queries":${jmap(_._1)},"cpu":${jmap(_._2)},"sf":"$sfDir"}"""
+        s""""queries":${jmap(_._1)},"cpu":${jmap(_._2)},"sf":"$sfDir",""" +
+        s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     try {
       val p = java.nio.file.Paths.get("bench_queries.json")
       java.nio.file.Files.write(p, detail.getBytes("UTF-8"))

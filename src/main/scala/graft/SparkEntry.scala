@@ -124,12 +124,19 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. A
     * duplicate key across modules would SILENTLY shadow the earlier
     * implementation (Map semantics) — round 15 nearly shipped two
-    * such collisions — so the merge fails loudly instead. */
+    * such collisions — so the merge fails loudly instead. Each key
+    * first registers the native functions, since the harness may hand
+    * in a session built without GraftExtensions. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
     val all = modules.flatMap(_.queries)
     val dups = all.groupBy(_._1).filter(_._2.size > 1).keys
     require(dups.isEmpty, s"duplicate graded keys across modules: ${dups.mkString(", ")}")
-    all.toMap
+    all.map { case (k, f) =>
+      k -> { (s: SparkSession, dir: String) =>
+        GraftExtensions.register(s)
+        f(s, dir)
+      }
+    }.toMap
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

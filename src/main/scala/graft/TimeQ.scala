@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time individual graded queries. Usage:
   * runMain graft.TimeQ <sfDir> q_name [q_name ...] — prints secs each.
@@ -8,18 +7,7 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // keep saveAsTable (bucketed-join demo) out of the repo even when
-      // launched without build.sbt's javaOptions
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.graft(cpus.toInt, Sessions.fewerPartitions)
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()

@@ -127,7 +127,7 @@ object Text {
     * Output: (idCol, n_transitions, nll). */
   def perplexityScore(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    graft.functions.FoldExprs.ensureRegistered(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     val tok = tokens(docs, idCol, textCol)
     // r16: bigrams zip straight out of the per-doc token array —
     // consecutive non-empty tokens, exactly what the old per-doc
@@ -260,10 +260,8 @@ object Text {
     // the interpreted HOF fold it replaces — TextExprsSpec pins the
     // equality incl. multi-byte code points; the HOF paid a lambda
     // dispatch + O(position) substring re-scan PER CHARACTER).
-    // Registered by GraftExtensions at session build; re-registered
-    // defensively here for sessions built without the extension.
     org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.TextExprs.ensureRegistered)
+      .foreach(graft.GraftExtensions.register)
     expr(s"graft_polyhash($c)")
   }
 
@@ -957,7 +955,7 @@ object Sim {
   def cosineTopK(corpus: DataFrame, probes: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExprs.ensureRegistered(corpus.sparkSession)
+    graft.GraftExtensions.register(corpus.sparkSession)
     val all = corpus.select(col(idCol), col(vecCol).as("e2"))
       .withColumn("n2", expr("sqrt(graft_dot(e2, e2))"))
     val pr = probes.select(col(idCol).as("probe_id"), col(vecCol).as("e1"))
@@ -1906,9 +1904,9 @@ object Sketch {
   /** Theta-sketch aggregate of a BIGINT column (set-algebra-capable:
     * see graft.functions.SketchExprs), with the same lgK dial as
     * [[hllRollup]] — exact below 2^lgK distincts, ±1/sqrt(2^lgK)
-    * beyond. Registers the session function on first use. */
+    * beyond. */
   def thetaAgg(df: DataFrame, child: String, lgK: Int = 12): Column = {
-    graft.functions.SketchExprs.ensureRegistered(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     expr(s"graft_theta_agg($child, $lgK)")
   }
 
@@ -1928,7 +1926,7 @@ object Sketch {
     * + n_groups. */
   def kllRollup(df: DataFrame, valueCol: String, fine: Seq[String],
       coarse: Seq[String], ranks: Seq[Double], k: Int = 200): DataFrame = {
-    graft.functions.KllExprs.ensureRegistered(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     val merged = df.groupBy(fine.map(col): _*)
       .agg(expr(s"graft_kll_agg($valueCol, $k)").as("sk"))
       .groupBy(coarse.map(col): _*)
@@ -1956,7 +1954,7 @@ object Sketch {
     * bounds the constrained regime; the graded query runs exact). */
   def freqTopkRollup(df: DataFrame, itemCol: String, fine: Seq[String],
       coarse: Seq[String], k: Int, maxMapSize: Int = 128): DataFrame = {
-    graft.functions.FreqExprs.ensureRegistered(df.sparkSession)
+    graft.GraftExtensions.register(df.sparkSession)
     df.groupBy(fine.map(col): _*)
       .agg(expr(s"graft_freq_agg($itemCol, $maxMapSize)").as("sk"))
       .groupBy(coarse.map(col): _*)
@@ -2226,7 +2224,7 @@ object Profile {
     val c = df.select(col(groupCol).as("g"),
       expr(s"CAST(ROUND($valueCol * 100) AS BIGINT)").as("cents"))
     val bounds = if (approx) {
-      graft.functions.KllExprs.ensureRegistered(df.sparkSession)
+      graft.GraftExtensions.register(df.sparkSession)
       // cents are integers |v| <= 2^53, exact as doubles; getQuantile
       // returns a retained stream item, so the cast back is lossless.
       c.groupBy("g").agg(count(lit(1)).as("n"),
@@ -2526,7 +2524,7 @@ object Profile {
       valCol: String, approx: Boolean = false,
       k: Int = 200): DataFrame = {
     val pcts = if (approx) {
-      graft.functions.KllExprs.ensureRegistered(df.sparkSession)
+      graft.GraftExtensions.register(df.sparkSession)
       df.groupBy(col(groupCol))
         .agg(expr(s"graft_kll_agg(cast($valCol as double), $k)").as("sk"))
         .select(col(groupCol),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -63,12 +62,4 @@ case class SortedSumLast(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object FoldExprs {
-  /** Register graft_sorted_sum on this session — idempotent (the
-    * session is handed in by the harness). */
-  def ensureRegistered(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_sum", args => SortedSumLast(args(0)), "built-in")
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.datasketches.common.ArrayOfStringsSerDe
 import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch}
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -41,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class FreqSketchAgg(
     child: Expression,
-    maxMapSize: Int = 128,
+    maxMapSize: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[ItemsSketch[String]]
@@ -99,7 +98,7 @@ case class FreqSketchAgg(
   * exact (unfilled-map) regime the merge is exact too. */
 case class FreqMergeAgg(
     child: Expression,
-    maxMapSize: Int = 128,
+    maxMapSize: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[ItemsSketch[String]]
@@ -199,28 +198,4 @@ object FreqExprs {
     * type-check error like the functions' other contracts (review r6). */
   private[functions] def validMapSize(m: Int): Boolean =
     m >= 8 && (m & (m - 1)) == 0
-
-  /** Idempotent per-session registration (same rationale as
-    * SketchExprs.ensureRegistered). graft_freq_agg /
-    * graft_freq_merge_agg take an optional second literal arg:
-    * maxMapSize (default 128, power of 2) — the size/error dial
-    * (error <= ~3.5/maxMapSize of the stream length; exact while
-    * distinct items <= ~0.75*maxMapSize). */
-  def ensureRegistered(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_agg",
-      args => {
-        val m = if (args.size > 1) args(1).eval().toString.toInt else 128
-        FreqSketchAgg(args.head, m).toAggregateExpression()
-      }, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_merge_agg",
-      args => {
-        val m = if (args.size > 1) args(1).eval().toString.toInt else 128
-        FreqMergeAgg(args.head, m).toAggregateExpression()
-      }, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_topk",
-      args => FreqTopK(args(0), args(1)), "built-in")
-  }
 }

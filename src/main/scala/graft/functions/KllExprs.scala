@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -29,7 +28,7 @@ import org.apache.spark.sql.types._
   */
 case class KllSketchAgg(
     child: Expression,
-    k: Int = 200,
+    k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
@@ -80,7 +79,7 @@ case class KllSketchAgg(
   * quantile twin of hll_union_agg). */
 case class KllMergeAgg(
     child: Expression,
-    k: Int = 200,
+    k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
@@ -159,27 +158,4 @@ case class KllQuantileEst(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object KllExprs {
-  /** Idempotent per-session registration (same rationale as
-    * SketchExprs.ensureRegistered). graft_kll_agg takes an optional
-    * second literal arg: k (default 200), the accuracy/size dial. */
-  def ensureRegistered(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_agg",
-      args => {
-        val k = if (args.size > 1) args(1).eval().toString.toInt else 200
-        KllSketchAgg(args.head, k).toAggregateExpression()
-      }, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_merge_agg",
-      args => {
-        val k = if (args.size > 1) args(1).eval().toString.toInt else 200
-        KllMergeAgg(args.head, k).toAggregateExpression()
-      }, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_quantile",
-      args => KllQuantileEst(args(0), args(1)), "built-in")
-  }
 }

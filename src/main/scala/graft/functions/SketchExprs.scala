@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{SetOperation, Sketches, Union}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -27,7 +26,7 @@ import org.apache.spark.sql.types._
   */
 case class ThetaSketchAgg(
     child: Expression,
-    lgK: Int = 12,
+    lgK: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
@@ -127,27 +126,4 @@ case class ThetaDiffEstimate(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SketchExprs {
-  /** Idempotent per-session registration (same rationale as
-    * VectorExprs.ensureRegistered: sessions are handed in).
-    * graft_theta_agg takes an optional second literal arg: lgK
-    * (default 12) — the accuracy/size dial, surfaced through
-    * graft.api.Sketch.thetaAgg (VERDICT r4 task 5). */
-  def ensureRegistered(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_agg",
-      args => {
-        val lgK =
-          if (args.size > 1) args(1).eval().toString.toInt else 12
-        ThetaSketchAgg(args.head, lgK).toAggregateExpression()
-      }, "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_intersect_est",
-      args => ThetaIntersectEstimate(args(0), args(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_diff_est",
-      args => ThetaDiffEstimate(args(0), args(1)), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -95,9 +94,4 @@ object JaroWinkler {
     while (l < maxPrefix && s1.charAt(l) == s2.charAt(l)) l += 1
     jaro + l * 0.1 * (1.0 - jaro)
   }
-
-  def ensureRegistered(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler", args => JaroWinkler(args(0), args(1)),
-      "built-in")
 }

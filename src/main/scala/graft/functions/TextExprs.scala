@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
@@ -294,19 +293,5 @@ object Fingerprint {
     }
     if (i == 0) null
     else new GenericInternalRow(Array[Any](pref, full))
-  }
-}
-
-object TextExprs {
-  /** Register graft_polyhash / graft_rake_top / graft_fingerprint on
-    * this session — idempotent (the session is handed in by the
-    * harness). */
-  def ensureRegistered(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_polyhash", args => PolyHash(args(0)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rake_top", args => RakeTop(args(0), args(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fingerprint", args => Fingerprint(args(0)), "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
@@ -182,21 +181,4 @@ case class ArrayQ127Sum(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object VectorExprs {
-  /** Register graft_dot / graft_dot_pre on this session so
-    * `expr("graft_dot(a, b)")` parses — idempotent, called by every
-    * query that uses it (the session is handed in by the harness, so
-    * registration cannot be assumed to have happened at session build
-    * time). */
-  def ensureRegistered(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", args => ArrayDot(args(0), args(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_pre",
-      args => ArrayDotPrefix(args(0), args(1), args(2)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_q127_sum", args => ArrayQ127Sum(args(0)), "built-in")
-  }
 }

@@ -96,7 +96,6 @@ object ExtraText extends graft.QueryModule {
     * the null filter keeps the old inner-join semantics (empty/null
     * text emits no char rows, so the doc drops out). */
   def textFingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.ensureRegistered(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), expr("graft_fingerprint(text)").as("f"))
       .where(col("f").isNotNull)

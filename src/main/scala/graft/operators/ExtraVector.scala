@@ -32,7 +32,6 @@ object ExtraVector extends graft.QueryModule {
     * (no unrolled-tree Janino blowup), no per-element lambda dispatch.
     * Norms are still computed once per vector, never per pair. */
   def dedupEmbedCosine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     val v = emb(s, dir).select(col("label"), col("vec_id"), col("e"))
       .withColumn("n", expr("sqrt(graft_dot(e, e))"))
     val a = v.select(col("label"), col("vec_id").as("d1"),
@@ -97,7 +96,6 @@ object ExtraVector extends graft.QueryModule {
       "WHEN l.cell < r.cell THEN -1 WHEN l.cell > r.cell THEN 1 ELSE 0 END)"
 
   def simAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     val dotHof = "graft_dot(%s, %s)"
     val normHof = "sqrt(graft_dot(%s, %s))"
     // 1) coarse quantizer: per-label mean vector (k x d doubles) ->
@@ -202,7 +200,6 @@ object ExtraVector extends graft.QueryModule {
   }
 
   def simAnnPq(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     val m = pqM
     val sub = pqSub
     // 1) codebook: per-(label, subspace) mean subvector, collected

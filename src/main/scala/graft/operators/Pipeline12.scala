@@ -202,7 +202,6 @@ object Pipeline12 extends graft.QueryModule {
     * label_bin = (label ≥ 5). Score domain is [−8128, 8128] by the
     * ±0.5 fixture range × 64 dims. */
   private[graft] def scored(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     // r17: native graft_q127_sum kernel replaces the interpreted
     // aggregate(transform(...)) HOF pair — identical ascending-index
     // (long) floor(x·127) fold, one codegen'd loop per row (guide §4;

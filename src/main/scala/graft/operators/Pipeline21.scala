@@ -245,7 +245,6 @@ object Pipeline21 extends graft.QueryModule {
     * q_graph_pagerank) — state is the node vector, never the corpus. */
   def mlPic(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.clustering.PowerIterationClustering
-    graft.functions.VectorExprs.ensureRegistered(s)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))

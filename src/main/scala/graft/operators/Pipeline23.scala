@@ -197,7 +197,6 @@ object Pipeline23 extends graft.QueryModule {
     * rides a broadcast. Bit-identical integers to the exploded
     * formulation (TextExprsSpec pins it; oracle unchanged). */
   def textRake(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.ensureRegistered(s)
     val stop = TextOps.tokens(s, dir)
       .groupBy("token").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("token").asc).limit(10)

@@ -240,7 +240,6 @@ object Pipeline24 extends graft.QueryModule {
     * q_agg_mad's doc comment names for when the exact per-group sort
     * is too hot. */
   def aggMadKll(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.KllExprs.ensureRegistered(s)
     val base = Tables.orders(s, dir)
       .select(col("o_orderstatus").as("st"),
         col("o_totalprice").cast("double").as("x"))

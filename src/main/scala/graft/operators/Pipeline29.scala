@@ -40,7 +40,6 @@ object Pipeline29 extends graft.QueryModule {
     * codes only — the memory-speed compressed scan with cell
     * pruning, both dials at once. */
   def simAnnIvfPq(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     val centsLit = ExtraVector.ivfCentroidsLit(s, dir)
     val cbLit = ExtraVector.pqCodebookLit(s, dir)
     // one pass per vector: norm + nearest cell + PQ codes — the

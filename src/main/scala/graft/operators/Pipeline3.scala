@@ -170,7 +170,6 @@ object Pipeline3 extends graft.QueryModule {
     * pins est == exact-join count. NO oracle (sketch binary is
     * engine-specific). */
   def aggThetaIntersect(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchExprs.ensureRegistered(s)
     Tables.events(s, dir)
       .withColumn("day", to_date(col("ts")))
       .groupBy("day")

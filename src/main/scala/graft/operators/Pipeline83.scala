@@ -159,7 +159,7 @@ object Pipeline83 extends graft.QueryModule {
   /** The 16-bit SRP fingerprint SQL over a column named `e`
     * (array<double>, 64-dim) — literal plane arrays + codegen
     * graft_dot; shared with the Hamming-agreement curve
-    * (Pipeline89). Caller must ensureRegistered(graft_dot). */
+    * (Pipeline89). */
   private[operators] val srpFpSql: String = {
     def planeSql(j: Int): String = (0 until 64).map { d =>
       if (((d * 64L + j) * 1103515245L + 12345L) % 1000000007L % 2L == 0L)
@@ -184,7 +184,6 @@ object Pipeline83 extends graft.QueryModule {
       |        ELSE 0 END)), (a, x) -> a + x)""".stripMargin
 
   def vecSrpFingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     val fpSql = srpFpSql
     Tables.embeddings(s, dir)
       .select(col("vec_id").cast("long").as("vec_id"),

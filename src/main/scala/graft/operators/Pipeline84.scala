@@ -59,7 +59,6 @@ object Pipeline84 extends graft.QueryModule {
     * 100 TB: a pure per-row projection (8 tight loops, no shuffle at
     * all until the consumer aggregates). */
   def vecDct(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     val cols = (0 until 8).map { k =>
       // the D suffix keeps Spark's parser in DOUBLE ("1.0" alone
       // parses as DECIMAL(2,1) and fails graft_dot's type check)

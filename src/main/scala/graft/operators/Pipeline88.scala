@@ -24,7 +24,6 @@ object Pipeline88 extends graft.QueryModule {
     * 100 TB: the pair space is per-(brand,size) block — the blocked-
     * dedup shape; the scalar runs on the bounded pair frame only. */
   def dedupJaro(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaroWinkler.ensureRegistered(s)
     val p = Tables.part(s, dir)
       .select(col("p_brand"), col("p_size"), col("p_partkey"),
         col("p_name"))

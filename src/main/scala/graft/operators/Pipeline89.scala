@@ -27,7 +27,6 @@ object Pipeline89 extends graft.QueryModule {
     * 100 TB: the grid is (types × cents-domain)-bounded, not
     * row-bounded; the only row-scale work is the initial count agg. */
   def mlAdKsamp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.FoldExprs.ensureRegistered(s)
     val cells = Tables.events(s, dir)
       .select(col("event_type"),
         expr("cast(round(value * 100) as bigint)").as("v"))
@@ -90,7 +89,6 @@ object Pipeline89 extends graft.QueryModule {
     * 100 TB: the pair space is per-label-block (the blocked-dedup
     * shape); 4 dot kernels per pair, then a 3-row rollup. */
   def vecMatryoshka(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(s)
     val v = Tables.embeddings(s, dir)
       .select(col("label").cast("long").as("label"),
         col("vec_id").cast("long").as("vec_id"),
@@ -139,7 +137,6 @@ object Pipeline89 extends graft.QueryModule {
       .select(col("label").cast("long").as("label"),
         col("vec_id").cast("long").as("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))
-    graft.functions.VectorExprs.ensureRegistered(s)
     val withFp = v
       .select(col("label"), col("vec_id"), col("e"),
         expr(Pipeline83.srpFpSql).as("fp"),

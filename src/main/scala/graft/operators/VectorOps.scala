@@ -155,7 +155,6 @@ object VectorOps extends graft.QueryModule {
     val candIds = buckets.join(broadcast(probeBuckets), Seq("tbl", "bkt"))
       .where(col("vec_id") =!= col("probe_id"))
       .select("probe_id", "vec_id").distinct()
-    graft.functions.VectorExprs.ensureRegistered(s)
     def normOf(c: String) = s"sqrt(graft_dot($c, $c))"
     val vecs = emb(s, dir).select(col("vec_id"), col("e"))
     val corpus = vecs.select(col("vec_id"), col("e").as("e2"))

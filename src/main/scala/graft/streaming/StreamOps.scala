@@ -47,7 +47,6 @@ object StreamOps extends graft.QueryModule {
     * maxMapSize 256), so the batch twin is oracle-checkable against
     * exact counts; rank ties break (est desc, value asc). */
   def freqTopk(events: DataFrame): DataFrame = {
-    graft.functions.FreqExprs.ensureRegistered(events.sparkSession)
     events
       .withColumn("kval", get_json_object(col("props"), "$.k"))
       .groupBy(window(col("ts"), "6 hours"))

@@ -418,7 +418,6 @@ class ApiSpec extends AnyFunSuite {
   test("Sketch.kllRollup: k threads through the merge; sub-percent ranks keep distinct names") {
     val sp = spark
     import sp.implicits._
-    functions.KllExprs.ensureRegistered(sp)
     val df = (1 to 2000).map(i => (i % 4, i % 20, i.toDouble)).toDF("g", "f", "v")
     // ranks 0.995 and 0.999 used to BOTH name p100 (ADVICE r5) — now
     // p99_5 / p99_9, select-by-name safe.

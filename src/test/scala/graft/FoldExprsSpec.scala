@@ -13,7 +13,6 @@ class FoldExprsSpec extends AnyFunSuite {
 
   test("graft_sorted_sum equals the HOF fold on the perplexity shape " +
       "(long key, token-scale groups)") {
-    functions.FoldExprs.ensureRegistered(spark)
     val toks = graft.api.Text.tokens(
       Tables.documents(spark, TestSpark.sf001), "doc_id", "text")
       .withColumn("lp", expr("ln(1.0D + length(token))" +
@@ -30,7 +29,6 @@ class FoldExprsSpec extends AnyFunSuite {
   test("graft_sorted_sum equals the HOF fold on a 2-key struct with " +
       "duplicate leading keys (the ad_ksamp/theils shapes)") {
     val sp = spark
-    functions.FoldExprs.ensureRegistered(sp)
     import sp.implicits._
     val rows = Seq((1L, 3L, 0.125), (1L, 1L, -2.5), (1L, 1L, 0.0625),
       (2L, 7L, 1e-17), (2L, 0L, 1.0), (2L, 0L, -1.0), (2L, 5L, 1e-17))
@@ -54,7 +52,6 @@ class FoldExprsSpec extends AnyFunSuite {
 
   test("graft_sorted_sum edge semantics: empty -> 0, null -> null, " +
       "type check") {
-    functions.FoldExprs.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT graft_sorted_sum(CAST(array() AS
         |    ARRAY<STRUCT<k: BIGINT, x: DOUBLE>>)) AS e,

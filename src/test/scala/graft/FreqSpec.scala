@@ -54,7 +54,6 @@ class FreqSpec extends AnyFunSuite {
   }
 
   test("store leg: sketch binaries survive parquet and merge to the same top-k") {
-    graft.functions.FreqExprs.ensureRegistered(spark)
     val fine = Tables.documents(spark, dir)
       .select(col("lang"), col("source"), explode(expr(
         "filter(split(lower(text), ' '), x -> x <> '')")).as("token"))

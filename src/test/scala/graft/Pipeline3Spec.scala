@@ -82,7 +82,6 @@ class Pipeline3Spec extends AnyFunSuite {
     // -> |A∩B| = 10000, |A\B| = 10000, both far beyond exact mode.
     val sp = spark
     import sp.implicits._
-    functions.SketchExprs.ensureRegistered(sp)
     val df = ((0L until 20000L).map(u => (u, "a")) ++
       (10000L until 25000L).map(u => (u, "b"))).toDF("u", "side")
     val r = df.agg(

@@ -41,7 +41,6 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("KLL sketch binaries survive a parquet round-trip byte-exactly and still merge") {
-    functions.KllExprs.ensureRegistered(spark)
     val fine = Tables.events(spark, dir)
       .withColumn("day", to_date(col("ts")))
       .groupBy("event_type", "day")

@@ -14,7 +14,6 @@ class TextExprsSpec extends AnyFunSuite {
       s"(a, i) -> (a * 131 + ascii(substring($c, i, 1))) % 1000000007)"
 
   test("graft_polyhash equals the HOF fold on the multilingual corpus") {
-    functions.TextExprs.ensureRegistered(spark)
     val toks = graft.api.Text.tokens(
       Tables.documents(spark, TestSpark.sf001), "doc_id", "text")
     val both = toks.select(
@@ -28,7 +27,6 @@ class TextExprsSpec extends AnyFunSuite {
 
   test("graft_polyhash equals the HOF fold on unicode edges") {
     val sp = spark
-    functions.TextExprs.ensureRegistered(sp)
     import sp.implicits._
     val edges = Seq("", "a", "abc", "Zürich", "ναί", "日本語テキスト",
       "🙂x🙂", "mixé 字", "", "ascii only words")
@@ -80,7 +78,6 @@ class TextExprsSpec extends AnyFunSuite {
   }
 
   test("graft_rake_top kernel equals the exploded RAKE on the fixture corpus") {
-    functions.TextExprs.ensureRegistered(spark)
     for (dir <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
       val ref = rakeReference(dir).collect()
       val got = operators.Pipeline23.textRake(spark, dir).collect()
@@ -92,7 +89,6 @@ class TextExprsSpec extends AnyFunSuite {
 
   test("graft_rake_top edges: ties, empties, all-stop docs, null") {
     val sp = spark
-    functions.TextExprs.ensureRegistered(sp)
     import sp.implicits._
     // stop list = {the}; doc 1: two single-word runs of equal score —
     // tie broken by phrase ASC; doc 2: empty tokens do NOT break a
@@ -154,7 +150,6 @@ class TextExprsSpec extends AnyFunSuite {
 
   test("graft_fingerprint equals the exploded reference on the corpus") {
     val sp = spark
-    functions.TextExprs.ensureRegistered(sp)
     val docs = Tables.documents(sp, TestSpark.sf001)
     val native = docs
       .select(col("doc_id"), expr("graft_fingerprint(text)").as("f"))
@@ -171,7 +166,6 @@ class TextExprsSpec extends AnyFunSuite {
 
   test("graft_fingerprint edges: boundaries, wrap, unicode, empty/null") {
     val sp = spark
-    functions.TextExprs.ensureRegistered(sp)
     import sp.implicits._
     // 31/32/33-char prefix boundary, >64-char weight wrap, 1-char,
     // unicode (code points, not bytes), and a 200-char doc
@@ -198,7 +192,6 @@ class TextExprsSpec extends AnyFunSuite {
   }
 
   test("graft_polyhash null and type semantics") {
-    functions.TextExprs.ensureRegistered(spark)
     val r = spark.sql(
       "SELECT graft_polyhash(CAST(NULL AS STRING)) AS n," +
         " graft_polyhash('') AS e").head()

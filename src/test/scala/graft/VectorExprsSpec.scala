@@ -8,7 +8,6 @@ class VectorExprsSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
 
   test("graft_dot is bit-identical to the interpreted HOF fold") {
-    functions.VectorExprs.ensureRegistered(spark)
     val e = Tables.embeddings(spark, TestSpark.sf001)
       .withColumn("e", expr("transform(embedding, x -> cast(x AS double))"))
     val both = e.select(
@@ -20,7 +19,6 @@ class VectorExprsSpec extends AnyFunSuite {
   }
 
   test("graft_dot null/edge semantics") {
-    functions.VectorExprs.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS n,
         |  graft_dot(array(1.0d, 2.0d), array(3.0d)) AS shorter,
@@ -32,7 +30,6 @@ class VectorExprsSpec extends AnyFunSuite {
   }
 
   test("graft_q127_sum is bit-identical to the interpreted HOF fold") {
-    functions.VectorExprs.ensureRegistered(spark)
     val e = Tables.embeddings(spark, TestSpark.sf001)
       .withColumn("e", expr("cast(embedding as array<double>)"))
     val both = e.select(
@@ -51,7 +48,6 @@ class VectorExprsSpec extends AnyFunSuite {
   }
 
   test("graft_dot_pre is bit-identical to the slice form") {
-    functions.VectorExprs.ensureRegistered(spark)
     val e = Tables.embeddings(spark, TestSpark.sf001)
       .withColumn("e", expr("transform(embedding, x -> cast(x AS double))"))
     Seq(8, 16, 32).foreach { l =>
@@ -63,7 +59,6 @@ class VectorExprsSpec extends AnyFunSuite {
   }
 
   test("graft_dot_pre edge semantics: n beyond length, zero, null") {
-    functions.VectorExprs.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT graft_dot_pre(array(1.0d, 2.0d), array(3.0d, 4.0d), 99) AS over,
         |  graft_dot_pre(array(1.0d, 2.0d), array(3.0d, 4.0d), 0) AS zero,
@@ -75,7 +70,6 @@ class VectorExprsSpec extends AnyFunSuite {
   }
 
   test("graft_dot rejects non-double-array inputs at analysis") {
-    functions.VectorExprs.ensureRegistered(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_dot(array('a'), array('b'))").collect()
     }
