@@ -26,6 +26,10 @@ FAILED KEYS: Bench lists every key that threw in either pass under
 "failed" in bench_queries.json. A thrown key's elapsed time is not its
 cost, so any failed key FAILS the gate regardless of its cpu reading.
 
+NONDETERMINISTIC KEYS: Bench also lists every key whose two passes
+returned different row counts under "nondeterministic". A graded key
+must return the same rows on every run, so any such key FAILS the gate.
+
 Queries with no budget (new this round) are listed as warnings; record
 them into the budget file at round close. Sub-0.2-CPU-s budgets are
 floored to 0.2 s before the 2x test: at that magnitude the measurement
@@ -77,6 +81,8 @@ def main():
               "(host pause suspected; informational)")
     failures = [f"  FAILED {n}: threw during the bench run"
                 for n in sorted(bench.get("failed", []))]
+    failures += [f"  NONDET {n}: row counts differ between the two passes"
+                 for n in sorted(bench.get("nondeterministic", []))]
     warnings = []
     for name, got in sorted(cpu.items()):
         if name not in budgets:

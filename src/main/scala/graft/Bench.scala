@@ -10,11 +10,15 @@ object Bench {
     def warmup(what: String)(body: => Unit): Unit =
       try body
       catch { case e: Throwable => System.err.println(s"[bench] warmup $what failed: $e") }
+    // The key map is merged once; the warmup and both passes share it.
+    val queries = SparkEntry.queries
     // Untimed warmup: touch every table once so FileIndex listing,
     // parquet footer reads, and codegen warmup don't land on whichever
-    // query the Map happens to run first (~4 s of one-time cost).
-    graft.Tables.names.foreach { t =>
-      warmup(t)(spark.read.parquet(s"$sfDir/$t.parquet").count())
+    // query the Map happens to run first (~4 s of one-time cost). Read
+    // through Tables so the schemas it infers are the ones the timed
+    // passes reuse.
+    Tables.names.foreach { t =>
+      warmup(t)(Tables.t(spark, sfDir, t).count())
     }
     // ... and run one tiny query through the agg/join/window/codegen
     // machinery: Janino bootstrap, UnsafeRow infra, and JIT warmup are
@@ -23,8 +27,8 @@ object Bench {
     warmup("codegen") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
+      val n = Tables.t(spark, sfDir, "nation")
+      val r = Tables.t(spark, sfDir, "region")
       n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(
@@ -35,7 +39,7 @@ object Bench {
       // column decode plus codegen of the tokenize/explode lambda
       // machinery (the driver's r5 recording attributed ~5 CPU-s of
       // this to q_text_stats; quiet re-runs read ~7 vs its 12.6).
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
+      Tables.t(spark, sfDir, "documents").limit(64)
         .select(explode(expr(
           "filter(split(lower(text), ' '), x -> x <> '')")).as("token"))
         .groupBy("token").count().count()
@@ -64,7 +68,7 @@ object Bench {
         // fills the shared trained-merge memo (Pipeline5.learnedMerges)
         // consumed by both bpe_train and bpe_apply
         "q_text_bpe_train").foreach { k =>
-      warmup(k)(SparkEntry.queries(k)(spark, sfDir).count())
+      warmup(k)(queries(k)(spark, sfDir).count())
     }
     // ... and the shared KMeans target fit (memoized per (session,
     // sfDir)) used by the ML helper/evaluator/CV queries — a model
@@ -85,18 +89,21 @@ object Bench {
         case _ => () => 0L
       }
     // A key that throws in either pass is listed under "failed" (and
-    // fails cpu_gate.py): its elapsed time is not its cost.
+    // fails cpu_gate.py): its elapsed time is not its cost. Each pass
+    // also keeps the key's row count (-1 when it threw).
     val failed = scala.collection.mutable.SortedSet.empty[String]
-    def pass() = SparkEntry.queries.map { case (name, fn) =>
+    def pass() = queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val c0 = procCpu()
-      try fn(spark, sfDir).count()
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[bench] $name failed: $e")
-      }
+      val rows =
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name failed: $e")
+          -1L
+        }
       name -> ((System.nanoTime() - t0) / 1e9,
-        math.max(procCpu() - c0, 0L) / 1e9)
+        math.max(procCpu() - c0, 0L) / 1e9, rows)
     }
     // Timed pass: the headline wall metric (value / queries) is THIS
     // pass, unchanged in meaning. The per-query CPU that the regression
@@ -107,9 +114,16 @@ object Bench {
     // an inflated reading unless the throttle spans both.
     val run1 = pass()
     val run2 = pass()
-    val results = run1.map { case (k, (w, c)) =>
+    val results = run1.map { case (k, (w, c, _)) =>
       k -> ((w, math.min(c, run2(k)._2)))
     }
+    // Cheap determinism check: a key whose two passes both ran but
+    // returned different row counts is listed under "nondeterministic"
+    // (and fails cpu_gate.py).
+    val nondeterministic = run1.collect {
+      case (k, (_, _, n)) if n >= 0 && run2(k)._3 >= 0 && n != run2(k)._3 => k
+    }.toSeq.sorted
+    def jlist(keys: Seq[String]) = keys.map("\"" + _ + "\"").mkString("[", ",", "]")
     def jmap(f: ((Double, Double)) => Double) = results
       .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val total = results.values.map(_._1).sum
@@ -126,7 +140,8 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","cpu_sec":$cpuTotal,""" +
         s""""cpu_protocol":"min_of_2_runs","cpus":$cpus,""" +
         s""""queries":${jmap(_._1)},"cpu":${jmap(_._2)},"sf":"$sfDir",""" +
-        s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+        s""""failed":${jlist(failed.toSeq)},""" +
+        s""""nondeterministic":${jlist(nondeterministic)}}"""
     try {
       val p = java.nio.file.Paths.get("bench_queries.json")
       java.nio.file.Files.write(p, detail.getBytes("UTF-8"))

@@ -10,7 +10,7 @@ object TimeQ {
     val spark = Sessions.graft(cpus.toInt, Sessions.fewerPartitions)
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try Tables.t(spark, sfDir, t).count()
       catch { case _: Throwable => }
     }
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean

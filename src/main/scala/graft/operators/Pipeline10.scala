@@ -341,8 +341,8 @@ object Pipeline10 extends graft.QueryModule {
     * Oracle: the recursive min-label walk q_dedup_cluster proved
     * green, plus the same grouped arithmetic. */
   def graphComponentsStats(s: SparkSession, dir: String): DataFrame = {
-    val cc = s.read.parquet(TextOps.ensureFullCc(s, dir))
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val cc = Tables.read(s, TextOps.ensureFullCc(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select(col("d1"), col("d2"))
     val nodes = cc.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), max("node").as("max_doc"))

@@ -126,7 +126,7 @@ object Pipeline2 extends graft.QueryModule {
     * scan lists only that directory — the layout that makes 100 TB
     * date/status-partitioned lakes scannable). */
   def sourcePartitionedRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(ensurePartitionedOrders(s, dir))
+    Tables.read(s, ensurePartitionedOrders(s, dir))
       .where(col("o_orderstatus") === "F")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("cnt"),
@@ -146,7 +146,7 @@ object Pipeline2 extends graft.QueryModule {
     * "join elimination by partition". PlanShapeSpec pins the
     * dynamicpruning expression on the scan. */
   def scanDpp(s: SparkSession, dir: String): DataFrame = {
-    val fact = s.read.parquet(ensurePartitionedOrders(s, dir))
+    val fact = Tables.read(s, ensurePartitionedOrders(s, dir))
     val dim = Tables.orders(s, dir)
       .where(col("o_orderpriority") === "1-URGENT" &&
         col("o_orderkey") < 2000)

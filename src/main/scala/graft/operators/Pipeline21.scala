@@ -298,7 +298,7 @@ object Pipeline21 extends graft.QueryModule {
     * wedge and closure are all hash equi-joins. No BNLJ beyond the
     * 1-row total attaches. */
   def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint() // support-sized; five consumers below
     val deg = pairs.select(col("d1").as("n"))

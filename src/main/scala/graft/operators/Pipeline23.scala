@@ -13,7 +13,7 @@ import graft.Tables
 object Pipeline23 extends graft.QueryModule {
 
   private[operators] def undirected(s: SparkSession, dir: String): DataFrame = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))

@@ -133,7 +133,7 @@ object Pipeline25 extends graft.QueryModule {
     * key reports. */
   private[operators] def lpaParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint(true)
     val und = pairs.select(col("d1").as("src"), col("d2").as("dst"))

@@ -74,7 +74,7 @@ object Pipeline26 extends graft.QueryModule {
     * 100 TB: one hash agg over the support-sized edge list, one over
     * the degree frame. */
   def graphDegreeDist(s: SparkSession, dir: String): DataFrame = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     val und = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))

@@ -98,7 +98,7 @@ object Pipeline27 extends graft.QueryModule {
     * SAME enumeration (the decomposeParts/lpaParts precedent). */
   private[operators] def triParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint() // support-sized; deg + orientation + closure
     val deg = pairs.select(col("d1").as("n"))

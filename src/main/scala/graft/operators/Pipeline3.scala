@@ -32,7 +32,7 @@ object Pipeline3 extends graft.QueryModule {
     // verify front and PageRank read; identical arithmetic values, so
     // the oracle is unchanged). Before, this query re-ran the band
     // self-join over the stored signatures on every run.
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     Dedup.connectedComponents(pairs, "d1", "d2")
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))

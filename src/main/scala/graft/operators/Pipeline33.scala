@@ -77,7 +77,7 @@ object Pipeline33 extends graft.QueryModule {
     * edge list + one hash agg — the pagerankMicro superstep shape,
     * localCheckpoint'd so lineage stays flat. */
   def graphHits(s: SparkSession, dir: String): DataFrame = {
-    val e = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val e = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8)
       .select(col("d1").cast("long").as("src"),
         col("d2").cast("long").as("dst"))

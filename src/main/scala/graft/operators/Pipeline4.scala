@@ -68,7 +68,7 @@ object Pipeline4 extends graft.QueryModule {
     // (TextOps.ensureFullCc) — in production the map must be frozen
     // storage (a re-derived map could re-label a cluster and move docs
     // across splits); deterministic, so the output is unchanged
-    val cc = s.read.parquet(TextOps.ensureFullCc(s, dir))
+    val cc = Tables.read(s, TextOps.ensureFullCc(s, dir))
     graft.api.Ml.leakageSafeSplit(
         Tables.documents(s, dir).select("doc_id", "lang"), "doc_id", cc)
       .select(col("doc_id"), col("lang"), col("rep"), col("split"))

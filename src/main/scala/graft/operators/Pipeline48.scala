@@ -113,6 +113,8 @@ object Pipeline48 extends graft.QueryModule {
       base.where(col("ok") % 2 === 1).select("ok", "q", "rf")
         .write.mode("overwrite").parquet(root + "/b2")
     }
+    // Not Tables.read: the schema merge at read time is what this key
+    // grades, so it must infer on every read.
     s.read.option("mergeSchema", "true")
       .parquet(root + "/b1", root + "/b2")
       .agg(count(lit(1)).as("n_rows"),

@@ -32,7 +32,7 @@ object Pipeline5 extends graft.QueryModule {
     // n_kept(i) = count(last_stage >= i)); Pipeline7Spec pins parity
     // with the chain-derived report.
     graft.api.Profile.pipelineReportFromMap(
-        s.read.parquet(Pipeline7.ensureStageMap(s, dir))
+        Tables.read(s, Pipeline7.ensureStageMap(s, dir))
           .withColumnRenamed("doc_id", "id"))
       .orderBy("stage")
 
@@ -101,7 +101,7 @@ object Pipeline5 extends graft.QueryModule {
     * twin of the same plan (stream-static anti-join) is asserted in
     * StreamingSpec. */
   def dedupChunkIncremental(s: SparkSession, dir: String): DataFrame = {
-    val stored = s.read.parquet(ensureCorpusChunks(s, dir))
+    val stored = Tables.read(s, ensureCorpusChunks(s, dir))
       .withColumn("seen", lit(1L))
     graft.api.Dedup.chunkSplit(
         Tables.documents(s, dir).where(pmod(col("doc_id"), lit(5)) === 0),

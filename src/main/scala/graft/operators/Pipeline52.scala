@@ -73,7 +73,7 @@ object Pipeline52 extends graft.QueryModule {
     * (pair, gram) equi-joins bounded by the stored candidate list —
     * never all-pairs. */
   def textBleuPairs(s: SparkSession, dir: String): DataFrame = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint(true)
     // r16: only the candidate-pair docs' n-grams/lengths are ever

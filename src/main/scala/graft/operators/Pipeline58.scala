@@ -70,7 +70,7 @@ object Pipeline58 extends graft.QueryModule {
         .write.mode("overwrite").partitionBy("o_orderstatus")
         .parquet(out)
     }
-    s.read.parquet(out)
+    Tables.read(s, out)
       .select(col("o_orderkey"), col("o_totalprice"),
         expr("regexp_extract(_metadata.file_path," +
           " 'o_orderstatus=([^/]+)', 1)").as("status_from_path"),

@@ -112,7 +112,7 @@ object Pipeline60 extends graft.QueryModule {
     * one hash agg; the curve is a groupBy on the degree-domain
     * frame. */
   def graphAvgNeighborDegree(s: SparkSession, dir: String): DataFrame = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     val und = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))

@@ -47,7 +47,7 @@ object Pipeline7 extends graft.QueryModule {
       val train = docs.where(pmod(col("doc_id"), lit(7)) =!= 0)
       val probes = docs.where(pmod(col("doc_id"), lit(7)) === 0)
       val block = Seq("slow", "error").toDF("word")
-      val sigs = s.read.parquet(TextOps.ensureFullSigs(s, dir))
+      val sigs = Tables.read(s, TextOps.ensureFullSigs(s, dir))
       graft.api.Profile.pipelineStageMap(train, "doc_id", "text",
           block, probes, TextOps.permTable,
           precomputedSigs = Some(sigs))
@@ -65,7 +65,7 @@ object Pipeline7 extends graft.QueryModule {
   private[graft] def ensureSurvivors(s: SparkSession, dir: String): String = {
     val out = graft.sources.Store.scopedPath(s, dir, "pipeline_survivors")
     graft.sources.Store.writeOnce(s, out) {
-      val keep = s.read.parquet(ensureStageMap(s, dir))
+      val keep = Tables.read(s, ensureStageMap(s, dir))
         .where(col("last_stage") === 5L).select("doc_id")
       Tables.documents(s, dir).select("doc_id", "text")
         .join(keep, "doc_id")
@@ -76,7 +76,7 @@ object Pipeline7 extends graft.QueryModule {
 
   def pipelineOutput(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val surv = s.read.parquet(ensureSurvivors(s, dir))
+    val surv = Tables.read(s, ensureSurvivors(s, dir))
     // survivors carry (doc_id, text); lang comes back via the id join
     val sv = surv.join(docs.select("doc_id", "lang"), "doc_id")
     val mixed = graft.api.Sample.temperatureCap(sv, "lang", "doc_id",
@@ -84,7 +84,7 @@ object Pipeline7 extends graft.QueryModule {
     // split by near-dup cluster representative — the STORED full-corpus
     // cluster map (TextOps.ensureFullCc), so a near-dup of a kept doc
     // that arrives tomorrow lands in the same split
-    val cc = s.read.parquet(TextOps.ensureFullCc(s, dir))
+    val cc = Tables.read(s, TextOps.ensureFullCc(s, dir))
     val assigned = graft.api.Ml.leakageSafeSplit(mixed, "doc_id", cc)
     val shards = assigned.select(col("split"),
         (pmod(col("doc_id") * lit(1103515245L) + lit(12345L),

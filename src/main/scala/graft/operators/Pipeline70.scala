@@ -34,7 +34,7 @@ object Pipeline70 extends graft.QueryModule {
     * polynomial because band-join buckets cap component degree (max
     * observed degree 3 at sf0.1). */
   def subRecursive(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .createOrReplaceTempView("graft_rec_pairs")
     s.sql(

@@ -86,7 +86,7 @@ object Pipeline8 extends graft.QueryModule {
     * (graft.api.Graph.pagerankMicro — deterministic on any engine,
     * partitioning or schedule). */
   def graphPagerank(s: SparkSession, dir: String): DataFrame = {
-    val pairs = s.read.parquet(TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     graft.api.Graph.pagerankMicro(pairs, "d1", "d2", iters = 3)
       .select(col("node").as("doc_id"), col("rank_micro"))

@@ -53,7 +53,7 @@ object StoreOps extends graft.QueryModule {
     * path equals the in-one-pass rollup exactly and lands within 5%
     * of the exact distinct count. */
   def aggSketchStoreRollup(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(ensureStored(s, dir))
+    Tables.read(s, ensureStored(s, dir))
       .groupBy("o_orderpriority")
       .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_customers"),
         count(lit(1)).as("n_months"))

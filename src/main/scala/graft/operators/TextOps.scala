@@ -204,7 +204,7 @@ object TextOps extends graft.QueryModule {
   private[graft] def ensureFullPairs(s: SparkSession, dir: String): String = {
     val out = graft.sources.Store.scopedPath(s, dir, "full_pairs")
     graft.sources.Store.writeOnce(s, out) {
-      val sig = s.read.parquet(ensureFullSigs(s, dir))
+      val sig = Tables.read(s, ensureFullSigs(s, dir))
       graft.api.Dedup.minhashCandidates(sig, "doc_id", minMatches = 4)
         .write.mode("overwrite").parquet(out)
     }
@@ -223,7 +223,7 @@ object TextOps extends graft.QueryModule {
     val out = graft.sources.Store.scopedPath(s, dir, "full_cc")
     graft.sources.Store.writeOnce(s, out) {
       graft.api.Dedup.connectedComponents(
-          s.read.parquet(ensureFullPairs(s, dir))
+          Tables.read(s, ensureFullPairs(s, dir))
             .where(col("matches") >= 8).select("d1", "d2"), "d1", "d2")
         .write.mode("overwrite").parquet(out)
     }
@@ -238,7 +238,7 @@ object TextOps extends graft.QueryModule {
     * ContextCleaner frees the RDDs). */
   private def candidateShingles(s: SparkSession, dir: String,
       minMatches: Int): (DataFrame, DataFrame) = {
-    val cand = s.read.parquet(ensureFullPairs(s, dir))
+    val cand = Tables.read(s, ensureFullPairs(s, dir))
       .where(col("matches") >= minMatches)
       .localCheckpoint(true)
     val candIds = cand
@@ -306,7 +306,7 @@ object TextOps extends graft.QueryModule {
         .write.mode("overwrite").parquet(out)
     }
     val newBatch = docs.where(pmod(col("doc_id"), lit(5)) === 0)
-    graft.api.Dedup.newVsCorpus(sigs(newBatch), s.read.parquet(out),
+    graft.api.Dedup.newVsCorpus(sigs(newBatch), Tables.read(s, out),
         "doc_id", minMatches = 8)
       .select(col("new_id"), col("corpus_id"), col("matches"),
         round(col("matches") / lit(16.0), 4).as("agreement"))

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,6 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `java.sql.Timestamp` Dataset encoders never see the drift.
   * This is the test that would have caught the r7 breakage before the
   * driver did.
+  *
+  * It also pins the per-session schema memo behind `Tables.read`: one
+  * inference job per path and session, the raw read's schema, and
+  * fresh attribute ids on every read.
   */
 class TablesSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
@@ -64,5 +73,92 @@ class TablesSpec extends AnyFunSuite {
     val direct = Tables.events(spark, dir).select(col("event_id"),
       expr("unix_micros(ts)").as("us"))
     assert(viaCast.except(direct).isEmpty && direct.except(viaCast).isEmpty)
+  }
+
+  /** Jobs `body` launches on this thread. Job starts reach listeners
+    * asynchronously, so a marker job in the same group closes the
+    * window: once its start arrives, every earlier start has too. */
+  private def jobsLaunchedBy(sp: SparkSession)(body: => Unit): Int = {
+    val sc = sp.sparkContext
+    val group = s"tables-spec-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (props.exists(_.getProperty("spark.job.description") == "marker"))
+            markerSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "reads")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job start never arrived")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Tables.t infers a schema once per session: first read 1 job, second 0") {
+    val sp = spark.newSession()
+    assert(jobsLaunchedBy(sp)(Tables.t(sp, dir, "orders")) == 1)
+    assert(jobsLaunchedBy(sp)(Tables.t(sp, dir, "orders")) == 0)
+    // another session has its own memo and infers again
+    val other = spark.newSession()
+    assert(jobsLaunchedBy(other)(Tables.t(other, dir, "orders")) == 1)
+    assert(jobsLaunchedBy(other)(Tables.t(other, dir, "orders")) == 0)
+  }
+
+  test("a memoized read has the raw read's schema for every fixture") {
+    val sp = spark.newSession()
+    Tables.names.foreach { t =>
+      Tables.t(sp, dir, t)
+      assert(jobsLaunchedBy(sp)(Tables.t(sp, dir, t)) == 0, t)
+      assert(Tables.t(sp, dir, t).schema == sp.read.parquet(s"$dir/$t.parquet").schema, t)
+    }
+  }
+
+  test("a self-join of two memoized reads resolves like the raw-read join") {
+    val sp = spark.newSession()
+    def pairs(a: DataFrame, b: DataFrame) =
+      a.join(b, a("o_custkey") === b("o_custkey") && a("o_orderkey") < b("o_orderkey")).count()
+    Tables.orders(sp, dir)
+    val viaMemo = pairs(Tables.orders(sp, dir), Tables.orders(sp, dir))
+    val raw = pairs(sp.read.parquet(s"$dir/orders.parquet"),
+      sp.read.parquet(s"$dir/orders.parquet"))
+    assert(viaMemo > 0 && viaMemo == raw)
+  }
+
+  test("store-once artifacts read through Tables.read return the raw read's rows") {
+    val sp = spark.newSession()
+    val pairs = graft.operators.TextOps.ensureFullPairs(sp, dir)
+    // a partitioned artifact too: its partition column comes from the
+    // directory names, not from the files
+    val parted = sources.Store.scopedPath(sp, dir, "tables_spec_parted")
+    Tables.orders(sp, dir).select("o_orderkey", "o_totalprice", "o_orderstatus")
+      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(parted)
+    try {
+      Seq(pairs, parted).foreach { path =>
+        Tables.read(sp, path)
+        val viaMemo = Tables.read(sp, path)
+        val raw = sp.read.parquet(path)
+        assert(viaMemo.schema == raw.schema, path)
+        assert(viaMemo.count() > 0, path)
+        assert(viaMemo.exceptAll(raw).isEmpty && raw.exceptAll(viaMemo).isEmpty, path)
+      }
+      assert(Tables.read(sp, parted).where(col("o_orderstatus") === "F").count() ==
+        sp.read.parquet(parted).where(col("o_orderstatus") === "F").count())
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(parted)
+      p.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(p, true)
+    }
   }
 }
