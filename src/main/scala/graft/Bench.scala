@@ -10,7 +10,7 @@ object Bench {
     def warmup(what: String)(body: => Unit): Unit =
       try body
       catch { case e: Throwable => System.err.println(s"[bench] warmup $what failed: $e") }
-    // The key map is merged once; the warmup and both passes share it.
+    // The key map is merged once; both passes share it.
     val queries = SparkEntry.queries
     // Untimed warmup: touch every table once so FileIndex listing,
     // parquet footer reads, and codegen warmup don't land on whichever
@@ -44,36 +44,13 @@ object Bench {
           "filter(split(lower(text), ' '), x -> x <> '')")).as("token"))
         .groupBy("token").count().count()
     }
-    // The two side-effecting demos (bucketed-table DDL, partitioned
-    // sink) write once per (session, sfDir) and skip the write on
-    // repeat — run them here untimed so the timed pass below measures
-    // the Exchange-free join / pruned scan, not the one-time layout.
-    // The three text/ORC roundtrips likewise write once per (session,
-    // sfDir) and skip the write on repeat (Sources.writeOnce) — warm
-    // them so the timed pass measures the graded read+verify path, not
-    // the one-time file layout (VERDICT r4 task 6).
-    Seq("q_join_bucketed", "q_source_partitioned_roundtrip",
-        "q_source_csv_roundtrip", "q_source_json_roundtrip",
-        "q_source_orc_roundtrip", "q_source_xml_roundtrip",
-        // store-once artifacts: the fine sketch table and the corpus /
-        // full-corpus MinHash signatures are one-time ingest products —
-        // warm them so the timed pass measures the stored-frame
-        // consumer path
-        "q_agg_sketch_store_rollup", "q_dedup_incremental",
-        "q_dedup_jaccard", "q_dedup_chunk_incremental",
-        // stored stage map + survivor corpus (Pipeline7.ensureStageMap
-        // / ensureSurvivors) consumed by the corpus report and the
-        // output-leg composition
-        "q_pipeline_corpus", "q_pipeline_output",
-        // fills the shared trained-merge memo (Pipeline5.learnedMerges)
-        // consumed by both bpe_train and bpe_apply
-        "q_text_bpe_train").foreach { k =>
-      warmup(k)(queries(k)(spark, sfDir).count())
+    // Untimed: every shared artifact the modules declare (store-once
+    // files, the bucketed-table DDL, the seeded model fits, the BPE
+    // merges) is built once here, so the timed passes measure each
+    // consumer's read path, not the one-time build.
+    SparkEntry.artifacts.foreach { a =>
+      warmup(a.name)(a(spark, sfDir))
     }
-    // ... and the shared KMeans target fit (memoized per (session,
-    // sfDir)) used by the ML helper/evaluator/CV queries — a model
-    // artifact like the bucketed layout, built once, untimed.
-    warmup("shared fits")(graft.operators.VectorOps.warmSharedFits(spark, sfDir))
     // Wall-clock alone cannot grade this build: r3/r4 drove benches of
     // 853.9 s and 478.1 s on byte-identical code (whole-VM stalls, see
     // BASELINE.md). Record process-CPU per query alongside wall so a
@@ -145,7 +122,9 @@ object Bench {
     try {
       val p = java.nio.file.Paths.get("bench_queries.json")
       java.nio.file.Files.write(p, detail.getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+    } catch {
+      case e: Throwable => System.err.println(s"[bench] writing bench_queries.json failed: $e")
+    }
     spark.stop()
     println(s"""{"metric":"total","value":$total,"unit":"sec","cpu_sec":$cpuTotal,"n_queries":${results.size},"sf":"$sfDir"}""")
   }

@@ -139,6 +139,16 @@ object SparkEntry {
     }.toMap
   }
 
+  /** Every shared artifact the modules declare: what Bench builds
+    * untimed before its timed passes. Names are unique, since a files
+    * artifact's name is its directory under the store root. */
+  def artifacts: Seq[sources.Store.Artifact[_]] = {
+    val all = modules.flatMap(_.artifacts)
+    val dups = all.groupBy(_.name).filter(_._2.size > 1).keys
+    require(dups.isEmpty, s"duplicate artifact names across modules: ${dups.mkString(", ")}")
+    all
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = {
@@ -149,8 +159,10 @@ object SparkEntry {
   }
 }
 
-/** A group of related graded operators. */
+/** A group of related graded operators, and the shared artifacts
+  * (`graft.sources.Store`) its queries read. */
 trait QueryModule {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracleSql: Map[String, String]
+  def artifacts: Seq[sources.Store.Artifact[_]] = Nil
 }

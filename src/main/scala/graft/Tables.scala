@@ -1,11 +1,7 @@
 package graft
 
-import java.util.{Collections, WeakHashMap}
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Central parquet readers: the generated fixtures (FIXTURES.md)
   * and the store-once artifacts (`graft.sources.Store`). All graded
@@ -24,28 +20,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet schemas already inferred, per session and path. Keyed
-    * weakly by session identity: a `newSession()` or a session with
-    * other parquet confs (nanosAsLong changes the inferred type of ns
-    * timestamps) infers its own, and the entries die with the session. */
-  private val schemas = Collections.synchronizedMap(
-    new WeakHashMap[SparkSession, ConcurrentHashMap[String, StructType]]())
+  /** Parquet schema of an immutable path, inferred once per session
+    * (a `newSession()` or a session with other parquet confs infers its
+    * own: nanosAsLong changes the inferred type of ns timestamps). */
+  private val schema = sources.Store.value("parquet_schema")((s, path) =>
+    s.read.parquet(path).schema)
 
   /** A fresh parquet relation over an immutable `path` (a fixture or a
     * completed store-once write). The first read in a session infers the
-    * schema; later reads pass it in, which plans identically but skips
+    * schema; every read passes it in, which plans identically but skips
     * Spark's schema-inference job. Each call has fresh attribute ids, so
     * self-joins resolve as they do on `spark.read.parquet`. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val known = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, StructType]())
-    known.get(path) match {
-      case null =>
-        val df = spark.read.parquet(path)
-        known.put(path, df.schema)
-        df
-      case schema => spark.read.schema(schema).parquet(path)
-    }
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schema(spark, path)).parquet(path)
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     read(spark, s"$dir/$name.parquet")

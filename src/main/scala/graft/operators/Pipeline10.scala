@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.23 round-9 ML-helper closers — the wrapper families an "ML-lib"
   * reference exposes that rounds 1-8 hadn't covered: frequent-itemset
@@ -43,16 +44,13 @@ object Pipeline10 extends graft.QueryModule {
     * (Pipeline25's q_ml_assoc_rules), the alsArtifacts pattern
     * (r13): the mine is deterministic (support counting is
     * partition-independent), so sharing cannot change any output.
-    * Built untimed via VectorOps.warmSharedFits like the other
+    * Built untimed by Bench like the other declared
     * shared model artifacts — the two graded keys time their
     * READOUTS over the support-sized freqItemsets frame, not the
     * one-time full-lattice mine (~21 CPU-s at sf0.1, the board's
     * heaviest fit: 19,972/20,000 items clear minCount at the graded
     * threshold, so the lattice cannot be pruned — VERDICT r12's
     * re-adjudication item, settled structurally). */
-  private val fpMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.ml.fpm.FPGrowthModel, DataFrame)]()
-
   /** The shared artifact: the fitted model AND the size ≤ 2 lattice
     * slice, sort-normalized and localCheckpoint'd ONCE — MLlib's
     * FPGrowthModel.freqItemsets is a lazy lineage over the PFP mine,
@@ -60,18 +58,14 @@ object Pipeline10 extends graft.QueryModule {
     * mine from its shuffle files (~6 CPU-s per key measured at
     * sf0.1); with it, both readouts scan a support-sized local
     * frame. */
-  private[graft] def fpArtifacts(s: SparkSession, dir: String):
-      (org.apache.spark.ml.fpm.FPGrowthModel, DataFrame) =
-    fpMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir,
-      _ => {
-        val model = buildFpModel(s, dir)
-        val small = model.freqItemsets
-          .where(size(col("items")) <= 2)
-          .withColumn("its", array_sort(col("items")))
-          .localCheckpoint(true)
-        (model, small)
-      })
+  private[graft] val fpArtifacts = Store.value("fpgrowth") { (s, dir) =>
+    val model = buildFpModel(s, dir)
+    val small = model.freqItemsets
+      .where(size(col("items")) <= 2)
+      .withColumn("its", array_sort(col("items")))
+      .localCheckpoint(true)
+    (model, small)
+  }
 
   /** The actual (unmemoized) build — package-visible so Pipeline10Spec
     * can pin fit determinism against an independent rebuild. */
@@ -140,33 +134,26 @@ object Pipeline10 extends graft.QueryModule {
     * tree-wise (state ~ nodes x features x bins, independent of row
     * count); only transform touches every row. */
   /** Memoized seeded RF fit — shared by the confusion evaluator and
-    * the feature-importance readout (Pipeline19), the kmTargetMemo
-    * pattern: deterministic, so sharing cannot change any output. */
-  private val rfMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.classification.RandomForestClassificationModel]()
-
-  private[operators] def rfModel(s: SparkSession,
-      dir: String): org.apache.spark.ml.classification.RandomForestClassificationModel =
-    rfMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir,
-      _ => {
-        import org.apache.spark.ml.classification.RandomForestClassifier
-        val km = VectorOps.sharedKmeansTarget(s, dir)
-        // the fit rescans train once per tree-depth level unless
-        // cached; the fit is eager, so unpersist right after it (the
-        // LR evaluator's pattern).
-        val train = graft.api.Ml
-          .exceptFold(VectorOps.sharedRawFeats(s, dir), "vec_id", 5, 0)
-          .persist()
-        try new RandomForestClassifier().setNumTrees(20).setMaxDepth(6)
-          .setSeed(42L).setLabelCol("t").setFeaturesCol("raw")
-          .fit(km.transform(train)
-            .withColumn("t", col("target").cast("double")))
-        finally train.unpersist(false)
-      })
+    * the feature-importance readout (Pipeline19), the
+    * VectorOps.kmeansTarget pattern: deterministic, so sharing cannot change any output. */
+  private[operators] val rfModel = Store.value("random_forest") { (s, dir) =>
+    import org.apache.spark.ml.classification.RandomForestClassifier
+    val km = VectorOps.kmeansTarget(s, dir)
+    // the fit rescans train once per tree-depth level unless
+    // cached; the fit is eager, so unpersist right after it (the
+    // LR evaluator's pattern).
+    val train = graft.api.Ml
+      .exceptFold(VectorOps.sharedRawFeats(s, dir), "vec_id", 5, 0)
+      .persist()
+    try new RandomForestClassifier().setNumTrees(20).setMaxDepth(6)
+      .setSeed(42L).setLabelCol("t").setFeaturesCol("raw")
+      .fit(km.transform(train)
+        .withColumn("t", col("target").cast("double")))
+    finally train.unpersist(false)
+  }
 
   def mlRfEval(s: SparkSession, dir: String): DataFrame = {
-    val km = VectorOps.sharedKmeansTarget(s, dir)
+    val km = VectorOps.kmeansTarget(s, dir)
     val feats = VectorOps.sharedRawFeats(s, dir)
     val rf = rfModel(s, dir)
     val test = graft.api.Ml.fold(feats, "vec_id", 5, 0)
@@ -252,24 +239,13 @@ object Pipeline10 extends graft.QueryModule {
     * the readout joins back to the original keys. */
   /** Memoized seeded ALS fit + its id dictionaries and ratings frame —
     * shared by the probe readout (q_ml_als_topk) and the batch scorer
-    * (Pipeline24's q_ml_als_recommend_all), the kmTargetMemo pattern:
+    * (Pipeline24's q_ml_als_recommend_all), the VectorOps.kmeansTarget pattern:
     * the fit is deterministic (seeded block ALS on a checkpointed
     * ratings build), so sharing cannot change any output. Built
-    * untimed via VectorOps.warmSharedFits like the other shared model
+    * untimed by Bench like the other declared shared model
     * artifacts — the two graded keys time the READOUTS (bounded probe
     * BNLJ / blocked top-k), not the one-time factorization. */
-  private val alsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.ml.recommendation.ALSModel,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]()
-
-  private[graft] def alsArtifacts(s: SparkSession, dir: String):
-      (org.apache.spark.ml.recommendation.ALSModel,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) =
-    alsMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir,
-      _ => buildAlsArtifacts(s, dir))
+  private[graft] val alsArtifacts = Store.value("als")(buildAlsArtifacts)
 
   /** The actual (unmemoized) build — package-visible so Pipeline10Spec
     * can pin FIT determinism against an independent rebuild (the memo
@@ -341,8 +317,8 @@ object Pipeline10 extends graft.QueryModule {
     * Oracle: the recursive min-label walk q_dedup_cluster proved
     * green, plus the same grouped arithmetic. */
   def graphComponentsStats(s: SparkSession, dir: String): DataFrame = {
-    val cc = Tables.read(s, TextOps.ensureFullCc(s, dir))
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val cc = Tables.read(s, TextOps.fullCc(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select(col("d1"), col("d2"))
     val nodes = cc.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), max("node").as("max_doc"))
@@ -357,6 +333,8 @@ object Pipeline10 extends graft.QueryModule {
           .as("density_ppm"))
       .orderBy("cluster_id")
   }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(fpArtifacts, rfModel, alsArtifacts)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ml_freq_itemsets" -> mlFreqItemsets,

@@ -66,7 +66,7 @@ object Pipeline16 extends graft.QueryModule {
     * (state = coefficient vector, independent of rows). */
   def mlSvcEval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.classification.LinearSVC
-    val km = VectorOps.sharedKmeansTarget(s, dir)
+    val km = VectorOps.kmeansTarget(s, dir)
     val feats = km.transform(VectorOps.sharedRawFeats(s, dir))
       .withColumn("t", (col("target") === 0).cast("double"))
     val train = graft.api.Ml.exceptFold(feats, "vec_id", 5, 0).persist()

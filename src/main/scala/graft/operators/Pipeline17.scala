@@ -164,7 +164,7 @@ object Pipeline17 extends graft.QueryModule {
     * agreement-with-KMeans assertion sees per-vector assignments. */
   private[graft] def bkAssignments(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.clustering.BisectingKMeans
-    val km = VectorOps.sharedKmeansTarget(s, dir)
+    val km = VectorOps.kmeansTarget(s, dir)
     // the divisive fit rescans the input once per split level unless
     // cached; the fit is eager, so unpersist right after it
     val feats = VectorOps.sharedRawFeats(s, dir).persist()

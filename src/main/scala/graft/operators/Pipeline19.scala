@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.32 round-10 batch 3 — the clustering-eval + vector-profile
   * helpers that close the evaluator matrix: an EXACT squared-euclidean
@@ -130,7 +131,7 @@ object Pipeline19 extends graft.QueryModule {
     * only transform touches every row afterwards. */
   def mlMlpEval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
-    val base = VectorOps.sharedKmeansTarget(s, dir)
+    val base = VectorOps.kmeansTarget(s, dir)
       .transform(VectorOps.sharedRawFeats(s, dir))
       .select(col("vec_id"), col("raw"),
         col("target").cast("double").as("label"))
@@ -159,7 +160,7 @@ object Pipeline19 extends graft.QueryModule {
     * for the assignment itself). */
   private[graft] def kmeansAssignedQ(s: SparkSession,
       dir: String): DataFrame =
-    VectorOps.sharedKmeansTarget(s, dir)
+    VectorOps.kmeansTarget(s, dir)
       .transform(VectorOps.sharedRawFeats(s, dir))
       .select(col("vec_id"), col("target"))
       .join(Tables.embeddings(s, dir)
@@ -248,11 +249,11 @@ object Pipeline19 extends graft.QueryModule {
     * the two transforms touch rows. */
   def mlModelPersist(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.clustering.KMeansModel
-    val path = s"/tmp/graft-models/${s.sparkContext.applicationId}/" +
+    val path = Store.path(s, "models/" +
       java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      "/kmeans"
-    val orig = VectorOps.sharedKmeansTarget(s, dir)
+      "/kmeans")
+    val orig = VectorOps.kmeansTarget(s, dir)
     // ADVICE r10: no exists() guard — a crashed partial previous write
     // would poison every later load, and File.exists assumes the local
     // FS is Spark's default FS. Model files are O(k·d); the

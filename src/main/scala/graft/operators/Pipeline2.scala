@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Det, Tables}
+import graft.sources.Store
 
 /** Round-2 training-data-pipeline additions (SURVEY.md §2.12):
   * content-hash dedup, PII masking, int8 embedding quantization,
@@ -93,40 +94,54 @@ object Pipeline2 extends graft.QueryModule {
       .orderBy("c_mktsegment")
   }
 
-  /** Per-(session, sfDir) tag for side-effecting demo outputs: makes
-    * concurrent sessions collision-free (ADVICE r2 — the fixed paths
-    * raced between e.g. `sbt test` and a bench run) and lets a repeat
-    * invocation in the same session skip the write, so Bench's untimed
-    * warmup absorbs the DDL and the timed pass measures the scan/join,
-    * not the write. Data per sfDir is static, so write-once-per-session
-    * preserves semantics. */
-  private def runTag(s: SparkSession, dir: String): String =
-    (s.sparkContext.applicationId + "_" +
-      java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff))
-      .replaceAll("[^a-zA-Z0-9_]", "_")
-
   /** The status-partitioned orders slice, written once per (session,
     * sfDir) — shared by the partitioned roundtrip (static pruning) and
     * the DPP demo (runtime pruning). */
-  private def ensurePartitionedOrders(s: SparkSession, dir: String): String = {
-    val out =
-      s"${System.getProperty("java.io.tmpdir")}/graft_part_roundtrip_${runTag(s, dir)}"
-    if (!new java.io.File(out, "_SUCCESS").exists()) {
-      Tables.orders(s, dir)
-        .where(col("o_orderkey") < 4000)
-        .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice",
-          "o_orderstatus")
-        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    }
-    out
+  private val partitionedOrders = Store.files("part_roundtrip") { (s, dir, out) =>
+    Tables.orders(s, dir)
+      .where(col("o_orderkey") < 4000)
+      .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice",
+        "o_orderstatus")
+      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
   }
+
+  /** The bucketed lineitem and orders slices as external tables under
+    * the store root, created once per (session, sfDir); the value is
+    * the two table names. The catalog is shared by every session of a
+    * context and can outlive the files (a released store root), so a
+    * table is rewritten unless both its entry and its completed files
+    * exist. */
+  private val bucketedTables = Store.value("bucketed_tables") { (s, dir) =>
+    val tag = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
+    val (liT, ordT) = (s"graft_li_b_$tag", s"graft_ord_b_$tag")
+    def save(df: DataFrame, key: String, table: String): Unit = {
+      val loc = new org.apache.hadoop.fs.Path(Store.path(s, table))
+      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (!s.catalog.tableExists(table) ||
+          !fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
+        s.sql(s"DROP TABLE IF EXISTS $table")
+        fs.delete(loc, true)
+        df.write.mode("overwrite").bucketBy(8, key).sortBy(key)
+          .option("path", loc.toString).saveAsTable(table)
+      }
+    }
+    save(Tables.lineitem(s, dir).where(col("l_orderkey") < 30000)
+        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount"),
+      "l_orderkey", liT)
+    save(Tables.orders(s, dir).where(col("o_orderkey") < 30000)
+        .select("o_orderkey", "o_orderpriority"),
+      "o_orderkey", ordT)
+    (liT, ordT)
+  }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(partitionedOrders, bucketedTables)
 
   /** Partitioned parquet sink + partition-pruned scan: write a slice of
     * orders partitioned by o_orderstatus, read back ONE partition (the
     * scan lists only that directory — the layout that makes 100 TB
     * date/status-partitioned lakes scannable). */
   def sourcePartitionedRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    Tables.read(s, ensurePartitionedOrders(s, dir))
+    Tables.read(s, partitionedOrders(s, dir))
       .where(col("o_orderstatus") === "F")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("cnt"),
@@ -146,7 +161,7 @@ object Pipeline2 extends graft.QueryModule {
     * "join elimination by partition". PlanShapeSpec pins the
     * dynamicpruning expression on the scan. */
   def scanDpp(s: SparkSession, dir: String): DataFrame = {
-    val fact = Tables.read(s, ensurePartitionedOrders(s, dir))
+    val fact = Tables.read(s, partitionedOrders(s, dir))
     val dim = Tables.orders(s, dir)
       .where(col("o_orderpriority") === "1-URGENT" &&
         col("o_orderkey") < 2000)
@@ -165,26 +180,7 @@ object Pipeline2 extends graft.QueryModule {
     * On a cluster this is the one-time-shuffle-then-never-again layout
     * for tables joined repeatedly on the same key. */
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
-    val tag = runTag(s, dir)
-    val (liT, ordT) = (s"graft_li_b_$tag", s"graft_ord_b_$tag")
-    if (!s.catalog.tableExists(liT) || !s.catalog.tableExists(ordT)) {
-      // the in-memory catalog is per-JVM but the warehouse dir persists:
-      // clear both, else a fresh session hits LOCATION_ALREADY_EXISTS
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      Seq(liT, ordT).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      val li = Tables.lineitem(s, dir).where(col("l_orderkey") < 30000)
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
-      val ord = Tables.orders(s, dir).where(col("o_orderkey") < 30000)
-        .select("o_orderkey", "o_orderpriority")
-      li.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(liT)
-      ord.write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(ordT)
-    }
+    val (liT, ordT) = bucketedTables(s, dir)
     s.table(liT).hint("merge")
       .join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")

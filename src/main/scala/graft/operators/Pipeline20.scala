@@ -20,7 +20,7 @@ object Pipeline20 extends graft.QueryModule {
     * KMeans target — the learnable-target discipline every classifier
     * wrapper uses. */
   private def base(s: SparkSession, dir: String): DataFrame =
-    VectorOps.sharedKmeansTarget(s, dir)
+    VectorOps.kmeansTarget(s, dir)
       .transform(VectorOps.sharedRawFeats(s, dir))
       .select(col("vec_id"), col("raw"),
         col("target").cast("double").as("t"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.34 round-11 batch — the helper-library operability closers from
   * VERDICT r10's missing list: the feature-prep assembler as a graded
@@ -98,10 +99,10 @@ object Pipeline21 extends graft.QueryModule {
     * two transforms touch rows. */
   def mlPipelinePersist(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.PipelineModel
-    val path = s"/tmp/graft-models/${s.sparkContext.applicationId}/" +
+    val path = Store.path(s, "models/" +
       java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      "/scaler_lr"
+      "/scaler_lr")
     val orig = VectorOps.scalerLrModel(s, dir)
     orig.write.overwrite().save(path)
     val reloaded = PipelineModel.load(path)
@@ -136,7 +137,7 @@ object Pipeline21 extends graft.QueryModule {
   def mlModelMetadata(s: SparkSession, dir: String): DataFrame = {
     val sp = s
     import sp.implicits._
-    val km = VectorOps.sharedKmeansTarget(s, dir)
+    val km = VectorOps.kmeansTarget(s, dir)
     val rf = Pipeline10.rfModel(s, dir)
     val pl = VectorOps.scalerLrModel(s, dir)
     val lr = pl.stages(1)
@@ -298,7 +299,7 @@ object Pipeline21 extends graft.QueryModule {
     * wedge and closure are all hash equi-joins. No BNLJ beyond the
     * 1-row total attaches. */
   def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint() // support-sized; five consumers below
     val deg = pairs.select(col("d1").as("n"))

@@ -29,7 +29,7 @@ object Pipeline22 extends graft.QueryModule {
     * edges), the textbook 100 TB BFS plan. Settled set and frontier
     * are localCheckpoint'd so round k never re-executes rounds <k. */
   def graphShortestPath(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     val und = pairs
       .select(col("d1").as("src"), col("d2").as("dst"))
@@ -69,7 +69,7 @@ object Pipeline22 extends graft.QueryModule {
     * stored pair list; the moment pass is two broadcast-joinable
     * equi-joins of edges onto the degree frame + one global agg. */
   def graphAssortativity(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     val und = pairs
       .select(col("d1").as("src"), col("d2").as("dst"))

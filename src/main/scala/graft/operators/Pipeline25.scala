@@ -87,7 +87,7 @@ object Pipeline25 extends graft.QueryModule {
     * only transform touches every row. */
   def mlDtreeEval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.classification.DecisionTreeClassifier
-    val km = VectorOps.sharedKmeansTarget(s, dir)
+    val km = VectorOps.kmeansTarget(s, dir)
     val feats = VectorOps.sharedRawFeats(s, dir)
     // the fit rescans train once per depth level unless cached; the
     // fit is eager, so unpersist right after it (the RF pattern)
@@ -133,7 +133,7 @@ object Pipeline25 extends graft.QueryModule {
     * key reports. */
   private[operators] def lpaParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint(true)
     val und = pairs.select(col("d1").as("src"), col("d2").as("dst"))

@@ -98,7 +98,7 @@ object Pipeline27 extends graft.QueryModule {
     * SAME enumeration (the decomposeParts/lpaParts precedent). */
   private[operators] def triParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint() // support-sized; deg + orientation + closure
     val deg = pairs.select(col("d1").as("n"))
@@ -252,7 +252,7 @@ object Pipeline27 extends graft.QueryModule {
     * persisted labeled frame; readouts are 1-row aggs. */
   def mlLearningCurve(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.classification.LogisticRegression
-    val km = VectorOps.sharedKmeansTarget(s, dir)
+    val km = VectorOps.kmeansTarget(s, dir)
     val labeled = km.transform(VectorOps.sharedRawFeats(s, dir))
       .withColumn("t", col("target").cast("double"))
       .persist() // 3 eager fits + 3 transforms + 3 bounded counts

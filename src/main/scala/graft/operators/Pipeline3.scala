@@ -28,11 +28,11 @@ object Pipeline3 extends graft.QueryModule {
     * near-dup cliques). No global sort, no driver-side graph. */
   def dedupCluster(s: SparkSession, dir: String): DataFrame = {
     // candidate pairs come from the STORED full-corpus frame (r8 —
-    // TextOps.ensureFullPairs, the same one-time ingest product the
+    // TextOps.fullPairs, the same one-time ingest product the
     // verify front and PageRank read; identical arithmetic values, so
     // the oracle is unchanged). Before, this query re-ran the band
     // self-join over the stored signatures on every run.
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     Dedup.connectedComponents(pairs, "d1", "d2")
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))

@@ -65,10 +65,10 @@ object Pipeline4 extends graft.QueryModule {
     * 80/10/10). */
   def splitLeakageSafe(s: SparkSession, dir: String): DataFrame = {
     // r8: the cluster map comes from the STORED full-corpus frame
-    // (TextOps.ensureFullCc) — in production the map must be frozen
+    // (TextOps.fullCc) — in production the map must be frozen
     // storage (a re-derived map could re-label a cluster and move docs
     // across splits); deterministic, so the output is unchanged
-    val cc = Tables.read(s, TextOps.ensureFullCc(s, dir))
+    val cc = Tables.read(s, TextOps.fullCc(s, dir))
     graft.api.Ml.leakageSafeSplit(
         Tables.documents(s, dir).select("doc_id", "lang"), "doc_id", cc)
       .select(col("doc_id"), col("lang"), col("rep"), col("split"))

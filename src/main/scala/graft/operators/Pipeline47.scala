@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.60 round-14 batch 15 — ingest-hardening + eval closers: the
   * PERMISSIVE malformed-CSV gate (the corrupt-record accounting
@@ -14,6 +15,18 @@ import graft.Tables
   * documented mapPartitions decode point).
   */
 object Pipeline47 extends graft.QueryModule {
+
+  private val dirtyCsv = Store.files("dirty_csv") { (s, dir, out) =>
+    Tables.lineitem(s, dir)
+      .select(expr("case when l_orderkey % 13 = 0" +
+        " then concat('garbled;;', l_returnflag)" +
+        " else concat_ws(',', cast(l_orderkey as string)," +
+        " cast(cast(round(l_quantity) as bigint) as string)," +
+        " l_returnflag) end").as("value"))
+      .write.mode("overwrite").text(out)
+  }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(dirtyCsv)
 
   /** MALFORMED-CSV INGEST GATE — a deterministic dirty CSV (rows
     * with orderkey ≡ 0 mod 13 are garbled to a single unparseable
@@ -28,21 +41,11 @@ object Pipeline47 extends graft.QueryModule {
     * schema-applied scan with per-row parse state — no shuffle until
     * the final 1-row agg. */
   def sourceCsvMalformed(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Store.scopedPath(s, dir, "dirty_csv")
-    graft.sources.Store.writeOnce(s, path) {
-      Tables.lineitem(s, dir)
-        .select(expr("case when l_orderkey % 13 = 0" +
-          " then concat('garbled;;', l_returnflag)" +
-          " else concat_ws(',', cast(l_orderkey as string)," +
-          " cast(cast(round(l_quantity) as bigint) as string)," +
-          " l_returnflag) end").as("value"))
-        .write.mode("overwrite").text(path)
-    }
     s.read
       .schema("ok BIGINT, q BIGINT, rf STRING, _corrupt_record STRING")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .csv(path)
+      .csv(dirtyCsv(s, dir))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L))
           .as("n_corrupt"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.61 round-14 batch 16 — monitoring + lake-ingest closers: the
   * Shewhart I-MR control chart (the process-monitoring limits beside
@@ -91,6 +92,19 @@ object Pipeline48 extends graft.QueryModule {
       .orderBy("event_type")
   }
 
+  private val evolvingPq = Store.files("evolving_pq") { (s, dir, root) =>
+    val base = Tables.lineitem(s, dir)
+      .select(col("l_orderkey").as("ok"),
+        expr("cast(round(l_quantity) as bigint)").as("q"),
+        col("l_returnflag").as("rf"))
+    base.where(col("ok") % 2 === 0).select("ok", "q")
+      .write.mode("overwrite").parquet(root + "/b1")
+    base.where(col("ok") % 2 === 1).select("ok", "q", "rf")
+      .write.mode("overwrite").parquet(root + "/b2")
+  }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(evolvingPq)
+
   /** PARQUET SCHEMA EVOLUTION — two batches written once per
     * (session, sf) with DRIFTING schemas (batch 1: (ok, q); batch 2
     * adds rf), read back under mergeSchema: the union schema must
@@ -102,17 +116,7 @@ object Pipeline48 extends graft.QueryModule {
     * 100 TB: two narrow writes; the merged read is a plain
     * multi-footer scan + one 1-row agg. */
   def sourceSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.Store.scopedPath(s, dir, "evolving_pq")
-    graft.sources.Store.writeOnce(s, root) {
-      val base = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"),
-          expr("cast(round(l_quantity) as bigint)").as("q"),
-          col("l_returnflag").as("rf"))
-      base.where(col("ok") % 2 === 0).select("ok", "q")
-        .write.mode("overwrite").parquet(root + "/b1")
-      base.where(col("ok") % 2 === 1).select("ok", "q", "rf")
-        .write.mode("overwrite").parquet(root + "/b2")
-    }
+    val root = evolvingPq(s, dir)
     // Not Tables.read: the schema merge at read time is what this key
     // grades, so it must infer on every read.
     s.read.option("mergeSchema", "true")

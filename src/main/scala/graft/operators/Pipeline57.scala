@@ -70,7 +70,7 @@ object Pipeline57 extends graft.QueryModule {
     * tagged union of the two frames (graph-family rule: pure
     * equi-joins, no scalar-attach BNLJ), unpivoted with stack(). */
   def graphRichClub(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint(true)
     val deg = pairs.select(col("d1").as("v"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.64h round-14 batch 26 — lakehouse/ops closers: the CDC snapshot
   * diff (classify every key across two table versions), the file
@@ -50,6 +51,15 @@ object Pipeline58 extends graft.QueryModule {
       .orderBy("change_type")
   }
 
+  private val fileMeta = Store.files("filemeta") { (s, dir, out) =>
+    Tables.orders(s, dir)
+      .repartition(col("o_orderstatus"))
+      .write.mode("overwrite").partitionBy("o_orderstatus")
+      .parquet(out)
+  }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(fileMeta)
+
   /** FILE METADATA SCAN: write orders partitioned by o_orderstatus
     * (one file per partition directory via repartition on the
     * partition key), re-read with the hidden `_metadata.file_path`
@@ -63,14 +73,7 @@ object Pipeline58 extends graft.QueryModule {
     * metadata read is a plain scan (file_path is constant per split,
     * no extra IO). */
   def scanFileMetadata(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.sources.Store.scopedPath(s, dir, "filemeta")
-    graft.sources.Store.writeOnce(s, out) {
-      Tables.orders(s, dir)
-        .repartition(col("o_orderstatus"))
-        .write.mode("overwrite").partitionBy("o_orderstatus")
-        .parquet(out)
-    }
-    Tables.read(s, out)
+    Tables.read(s, fileMeta(s, dir))
       .select(col("o_orderkey"), col("o_totalprice"),
         expr("regexp_extract(_metadata.file_path," +
           " 'o_orderstatus=([^/]+)', 1)").as("status_from_path"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.64n round-14 batch 32 — the rolling exact median (an
   * order-statistic under a moving window, where every other rolling
@@ -92,6 +93,18 @@ object Pipeline64 extends graft.QueryModule {
         "round(adj_num / n, 6) as adjusted_diff")
   }
 
+  private val dialectCsv = Store.files("csv_dialect") { (s, dir, out) =>
+    Tables.documents(s, dir)
+      .selectExpr("doc_id", "concat(lang, '|', source) as tag",
+        "n_chars")
+      .write.mode("overwrite")
+      .option("delimiter", "|").option("quoteAll", "true")
+      .option("header", "true")
+      .csv(out)
+  }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(dialectCsv)
+
   /** CSV DIALECT ROUNDTRIP: pipe-delimited, fully-quoted CSV with a
     * VALUE CONTAINING THE DELIMITER (lang|source concatenated with a
     * literal pipe) — the quoting/escaping path
@@ -103,20 +116,10 @@ object Pipeline64 extends graft.QueryModule {
     * 100 TB: per-row serialization both legs, no shuffle before the
     * output sort. */
   def sourceCsvDialect(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.sources.Store.scopedPath(s, dir, "csv_dialect")
-    graft.sources.Store.writeOnce(s, out) {
-      Tables.documents(s, dir)
-        .selectExpr("doc_id", "concat(lang, '|', source) as tag",
-          "n_chars")
-        .write.mode("overwrite")
-        .option("delimiter", "|").option("quoteAll", "true")
-        .option("header", "true")
-        .csv(out)
-    }
     s.read
       .schema("doc_id LONG, tag STRING, n_chars LONG")
       .option("delimiter", "|").option("header", "true")
-      .csv(out)
+      .csv(dialectCsv(s, dir))
       .groupBy(expr("substring(tag, 1, 2)").as("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum("n_chars").as("sum_chars"),

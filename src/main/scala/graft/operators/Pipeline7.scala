@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.20 round-8 additions: the OUTPUT leg of the corpus pipeline —
   * q_pipeline_corpus chains the gates (length → blocklist → repetition
@@ -24,7 +25,7 @@ object Pipeline7 extends graft.QueryModule {
     * projection).
     *
     * 100 TB: every stage keeps the corpus un-collected — survivors
-    * come from the STORED gated-corpus frame ([[ensureSurvivors]], the
+    * come from the STORED gated-corpus frame ([[survivors]], the
     * one-time materialization a production pipeline writes anyway),
     * the quota is a |langs|-row broadcast, the split is one equi-join
     * against the (small) cluster map, and the report is a
@@ -39,22 +40,18 @@ object Pipeline7 extends graft.QueryModule {
     * re-derived the chain in-query) and the survivor corpus below are
     * scans of this frame. Deterministic, so storing cannot change any
     * consumer's output. */
-  private[graft] def ensureStageMap(s: SparkSession, dir: String): String = {
+  private[graft] val stageMap = Store.files("pipeline_stage_map") { (s, dir, out) =>
     import s.implicits._
-    val out = graft.sources.Store.scopedPath(s, dir, "pipeline_stage_map")
-    graft.sources.Store.writeOnce(s, out) {
-      val docs = Tables.documents(s, dir)
-      val train = docs.where(pmod(col("doc_id"), lit(7)) =!= 0)
-      val probes = docs.where(pmod(col("doc_id"), lit(7)) === 0)
-      val block = Seq("slow", "error").toDF("word")
-      val sigs = Tables.read(s, TextOps.ensureFullSigs(s, dir))
-      graft.api.Profile.pipelineStageMap(train, "doc_id", "text",
-          block, probes, TextOps.permTable,
-          precomputedSigs = Some(sigs))
-        .withColumnRenamed("id", "doc_id")
-        .write.mode("overwrite").parquet(out)
-    }
-    out
+    val docs = Tables.documents(s, dir)
+    val train = docs.where(pmod(col("doc_id"), lit(7)) =!= 0)
+    val probes = docs.where(pmod(col("doc_id"), lit(7)) === 0)
+    val block = Seq("slow", "error").toDF("word")
+    val sigs = Tables.read(s, TextOps.fullSigs(s, dir))
+    graft.api.Profile.pipelineStageMap(train, "doc_id", "text",
+        block, probes, TextOps.permTable,
+        precomputedSigs = Some(sigs))
+      .withColumnRenamed("id", "doc_id")
+      .write.mode("overwrite").parquet(out)
   }
 
   /** Survivor corpus of the gate pipeline, STORED to parquet once per
@@ -62,29 +59,27 @@ object Pipeline7 extends graft.QueryModule {
     * materialized artifact. Since r9 it derives from the stored stage
     * map (survivor = last_stage = 5, text re-attached by id join), so
     * the 5-stage chain runs once per session total. */
-  private[graft] def ensureSurvivors(s: SparkSession, dir: String): String = {
-    val out = graft.sources.Store.scopedPath(s, dir, "pipeline_survivors")
-    graft.sources.Store.writeOnce(s, out) {
-      val keep = Tables.read(s, ensureStageMap(s, dir))
-        .where(col("last_stage") === 5L).select("doc_id")
-      Tables.documents(s, dir).select("doc_id", "text")
-        .join(keep, "doc_id")
-        .write.mode("overwrite").parquet(out)
-    }
-    out
+  private val survivors = Store.files("pipeline_survivors") { (s, dir, out) =>
+    val keep = Tables.read(s, stageMap(s, dir))
+      .where(col("last_stage") === 5L).select("doc_id")
+    Tables.documents(s, dir).select("doc_id", "text")
+      .join(keep, "doc_id")
+      .write.mode("overwrite").parquet(out)
   }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(stageMap, survivors)
 
   def pipelineOutput(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val surv = Tables.read(s, ensureSurvivors(s, dir))
+    val surv = Tables.read(s, survivors(s, dir))
     // survivors carry (doc_id, text); lang comes back via the id join
     val sv = surv.join(docs.select("doc_id", "lang"), "doc_id")
     val mixed = graft.api.Sample.temperatureCap(sv, "lang", "doc_id",
       total = 600L)
     // split by near-dup cluster representative — the STORED full-corpus
-    // cluster map (TextOps.ensureFullCc), so a near-dup of a kept doc
+    // cluster map (TextOps.fullCc), so a near-dup of a kept doc
     // that arrives tomorrow lands in the same split
-    val cc = Tables.read(s, TextOps.ensureFullCc(s, dir))
+    val cc = Tables.read(s, TextOps.fullCc(s, dir))
     val assigned = graft.api.Ml.leakageSafeSplit(mixed, "doc_id", cc)
     val shards = assigned.select(col("split"),
         (pmod(col("doc_id") * lit(1103515245L) + lit(12345L),

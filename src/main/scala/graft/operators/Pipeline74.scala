@@ -26,7 +26,7 @@ object Pipeline74 extends graft.QueryModule {
     * joins are (doc, gram) EQUI joins bounded by the stored pair
     * list — the q_text_bleu_pairs plan with a second denominator. */
   def textRougePairs(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .localCheckpoint(true)
     // r16: only the candidate-pair docs' n-grams are ever consumed —

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.70 round-15 batch 43 — multimodal-ingest and profiling closers:
   * the `binaryFile` source roundtrip (Spark's opaque-bytes reader —
@@ -14,6 +15,22 @@ import graft.Tables
   * table).
   */
 object Pipeline75 extends graft.QueryModule {
+
+  private val binFiles = Store.files("binfiles") { (s, dir, out) =>
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(out))
+    Tables.documents(s, dir).where(col("doc_id") % 50 === 0)
+      .select("doc_id", "text").collect().foreach { r =>
+        val p = new org.apache.hadoop.fs.Path(
+          out, f"doc_${r.getLong(0)}%09d.bin")
+        val os = fs.create(p, true)
+        try os.write(r.getString(1).getBytes("UTF-8"))
+        finally os.close()
+      }
+  }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(binFiles)
 
   /** BINARYFILE SOURCE ROUNDTRIP — every 50th document's text bytes
     * land ONCE per (session, sfDir) as .bin files (the
@@ -30,22 +47,7 @@ object Pipeline75 extends graft.QueryModule {
     * kernel runs where the bytes land, nothing but (id, len, sum)
     * leaves the scan. */
   def sourceBinaryfile(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.sources.Store.scopedPath(s, dir, "binfiles")
-    graft.sources.Store.writeOnce(s, out) {
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(out))
-      Tables.documents(s, dir).where(col("doc_id") % 50 === 0)
-        .select("doc_id", "text").collect().foreach { r =>
-          val p = new org.apache.hadoop.fs.Path(
-            out, f"doc_${r.getLong(0)}%09d.bin")
-          val os = fs.create(p, true)
-          try os.write(r.getString(1).getBytes("UTF-8"))
-          finally os.close()
-        }
-      fs.create(new org.apache.hadoop.fs.Path(out, "_SUCCESS"), true)
-        .close()
-    }
+    val out = binFiles(s, dir)
     val sp = s
     import sp.implicits._
     s.read.format("binaryFile").load(s"$out/*.bin")

@@ -25,7 +25,7 @@ object Pipeline77 extends graft.QueryModule {
     * candidate list (never all pairs); texts arrive via two
     * broadcast-able doc joins on the bounded pair frame. */
   def textEditDistance(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.ensureFullPairs(s, dir))
+    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
       .where(col("matches") >= 8).select("d1", "d2")
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     pairs

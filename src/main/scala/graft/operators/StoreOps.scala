@@ -33,18 +33,12 @@ object StoreOps extends graft.QueryModule {
       .groupBy("o_orderpriority", "o_month")
       .agg(expr("hll_sketch_agg(o_custkey, 12)").as("sk"))
 
-  /** Path of the stored fine-sketch parquet for (session, sfDir). */
-  private[operators] def sketchPath(s: SparkSession, dir: String): String =
-    Store.scopedPath(s, dir, "hll_fine_sketches")
-
-  /** Materialize the fine sketch table once per (session, sfDir). */
-  private[operators] def ensureStored(s: SparkSession, dir: String): String = {
-    val out = sketchPath(s, dir)
-    Store.writeOnce(s, out) {
-      fineSketches(s, dir).write.mode("overwrite").parquet(out)
-    }
-    out
+  /** The fine sketch table, materialized once per (session, sfDir). */
+  private val stored = Store.files("hll_fine_sketches") { (s, dir, out) =>
+    fineSketches(s, dir).write.mode("overwrite").parquet(out)
   }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(stored)
 
   /** Graded consumer: READ the stored fine sketches, union-merge to
     * per-priority, estimate distinct customers. The fact table is not
@@ -53,7 +47,7 @@ object StoreOps extends graft.QueryModule {
     * path equals the in-one-pass rollup exactly and lands within 5%
     * of the exact distinct count. */
   def aggSketchStoreRollup(s: SparkSession, dir: String): DataFrame =
-    Tables.read(s, ensureStored(s, dir))
+    Tables.read(s, stored(s, dir))
       .groupBy("o_orderpriority")
       .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_customers"),
         count(lit(1)).as("n_months"))

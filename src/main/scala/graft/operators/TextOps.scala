@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** §2.8 text / LLM-pipeline operators, part 1: tokenization, n-grams,
   * TF-IDF, corpus stats, lexicon scoring, dedup (exact + MinHash +
@@ -181,14 +182,10 @@ object TextOps extends graft.QueryModule {
     * (session, sfDir) — the one-time ingest product every signature
     * consumer reads (same pattern as the incremental-dedup corpus
     * store and the HLL sketch store; Bench warms it untimed). */
-  private[graft] def ensureFullSigs(s: SparkSession, dir: String): String = {
-    val out = graft.sources.Store.scopedPath(s, dir, "full_sigs")
-    graft.sources.Store.writeOnce(s, out) {
-      graft.api.Dedup.minhashSignatures(shingles(s, dir), "doc_id",
-          TextOps.permTable)
-        .write.mode("overwrite").parquet(out)
-    }
-    out
+  private[graft] val fullSigs = Store.files("full_sigs") { (s, dir, out) =>
+    graft.api.Dedup.minhashSignatures(shingles(s, dir), "doc_id",
+        TextOps.permTable)
+      .write.mode("overwrite").parquet(out)
   }
 
   /** Full-corpus MinHash band-candidate PAIRS (>=4/16 agreement, with
@@ -201,14 +198,10 @@ object TextOps extends graft.QueryModule {
     * full 16-perm agreement count, so `matches >= k` reproduces any
     * k-threshold band join exactly — deterministic, no consumer
     * output changes. */
-  private[graft] def ensureFullPairs(s: SparkSession, dir: String): String = {
-    val out = graft.sources.Store.scopedPath(s, dir, "full_pairs")
-    graft.sources.Store.writeOnce(s, out) {
-      val sig = Tables.read(s, ensureFullSigs(s, dir))
-      graft.api.Dedup.minhashCandidates(sig, "doc_id", minMatches = 4)
-        .write.mode("overwrite").parquet(out)
-    }
-    out
+  private[graft] val fullPairs = Store.files("full_pairs") { (s, dir, out) =>
+    val sig = Tables.read(s, fullSigs(s, dir))
+    graft.api.Dedup.minhashCandidates(sig, "doc_id", minMatches = 4)
+      .write.mode("overwrite").parquet(out)
   }
 
   /** Full-corpus near-dup CLUSTER MAP (min-label connected components
@@ -219,16 +212,27 @@ object TextOps extends graft.QueryModule {
     * anyway (a re-derived map could re-label a cluster and silently
     * move docs across train/test). Deterministic, so storing cannot
     * change any consumer's output. */
-  private[graft] def ensureFullCc(s: SparkSession, dir: String): String = {
-    val out = graft.sources.Store.scopedPath(s, dir, "full_cc")
-    graft.sources.Store.writeOnce(s, out) {
-      graft.api.Dedup.connectedComponents(
-          Tables.read(s, ensureFullPairs(s, dir))
-            .where(col("matches") >= 8).select("d1", "d2"), "d1", "d2")
-        .write.mode("overwrite").parquet(out)
-    }
-    out
+  private[graft] val fullCc = Store.files("full_cc") { (s, dir, out) =>
+    graft.api.Dedup.connectedComponents(
+        Tables.read(s, fullPairs(s, dir))
+          .where(col("matches") >= 8).select("d1", "d2"), "d1", "d2")
+      .write.mode("overwrite").parquet(out)
   }
+
+  /** The q_dedup_incremental corpus side (doc_id % 5 != 0), signed and
+    * STORED once: the one-time ingest product each new batch joins. */
+  private val corpusSigs = Store.files("corpus_sigs") { (s, dir, out) =>
+    incrementalSigs(Tables.documents(s, dir).where(pmod(col("doc_id"), lit(5)) =!= 0))
+      .write.mode("overwrite").parquet(out)
+  }
+
+  private def incrementalSigs(side: DataFrame): DataFrame =
+    graft.api.Dedup.minhashSignatures(
+      graft.api.Text.shingles(side, "doc_id", "text", 3), "doc_id",
+      TextOps.permTable)
+
+  override def artifacts: Seq[Store.Artifact[_]] =
+    Seq(fullSigs, fullPairs, fullCc, corpusSigs)
 
   /** Band candidates (from the stored signatures) + the shingles of
     * exactly the docs they mention — the shared front half of the
@@ -238,7 +242,7 @@ object TextOps extends graft.QueryModule {
     * ContextCleaner frees the RDDs). */
   private def candidateShingles(s: SparkSession, dir: String,
       minMatches: Int): (DataFrame, DataFrame) = {
-    val cand = Tables.read(s, ensureFullPairs(s, dir))
+    val cand = Tables.read(s, fullPairs(s, dir))
       .where(col("matches") >= minMatches)
       .localCheckpoint(true)
     val candIds = cand
@@ -254,7 +258,7 @@ object TextOps extends graft.QueryModule {
     * Jaccard on candidate pairs (verify MinHash)", the second stage of
     * the two-stage near-dup pipeline, in its production shape: the
     * band join proposes pairs from the STORED full-corpus signatures
-    * ([[ensureFullSigs]] — at ingest a pipeline signs each doc once;
+    * ([[fullSigs]] — at ingest a pipeline signs each doc once;
     * re-deriving signatures per verify query re-pays the corpus-wide
     * shingle explode, ~2/3 of this query's r5 CPU), and the exact
     * intersection count re-shingles ONLY docs that appear in some
@@ -296,18 +300,9 @@ object TextOps extends graft.QueryModule {
     * arithmetic hashing as q_dedup_minhash, so the oracle twin is pure
     * SQL. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    def sigs(side: DataFrame) = graft.api.Dedup.minhashSignatures(
-      graft.api.Text.shingles(side, "doc_id", "text", 3), "doc_id",
-      TextOps.permTable)
-    val out = graft.sources.Store.scopedPath(s, dir, "corpus_sigs")
-    graft.sources.Store.writeOnce(s, out) {
-      sigs(docs.where(pmod(col("doc_id"), lit(5)) =!= 0))
-        .write.mode("overwrite").parquet(out)
-    }
-    val newBatch = docs.where(pmod(col("doc_id"), lit(5)) === 0)
-    graft.api.Dedup.newVsCorpus(sigs(newBatch), Tables.read(s, out),
-        "doc_id", minMatches = 8)
+    val newBatch = Tables.documents(s, dir).where(pmod(col("doc_id"), lit(5)) === 0)
+    graft.api.Dedup.newVsCorpus(incrementalSigs(newBatch),
+        Tables.read(s, corpusSigs(s, dir)), "doc_id", minMatches = 8)
       .select(col("new_id"), col("corpus_id"), col("matches"),
         round(col("matches") / lit(16.0), 4).as("agreement"))
       .orderBy(col("matches").desc, col("new_id").asc, col("corpus_id").asc)

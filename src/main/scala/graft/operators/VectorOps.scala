@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Det, Tables}
+import graft.sources.Store
 
 /** §2.8 text / LLM-pipeline operators, part 2: similarity search,
   * multimodal join, vector analytics, feature scaling, MLlib wrapper.
@@ -37,43 +38,23 @@ object VectorOps extends graft.QueryModule {
     * identical seeded fit (VERDICT r3/r4: the duplicate fits were the
     * bench's heaviest family). A fitted model is a per-dataset artifact
     * like the bucketed table layout: built once (Bench warms it
-    * untimed via [[warmSharedFits]]), deterministic (seeded init, fixed
-    * iteration cap), so sharing cannot change any query's output from
-    * run to run. */
-  private val kmTargetMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.ml.clustering.KMeansModel]()
+    * untimed), deterministic (seeded init, fixed iteration cap), so
+    * sharing cannot change any query's output from run to run. Sibling
+    * ML-wrapper modules (Pipeline10's RandomForest evaluator) reuse it
+    * so their confusion readouts are comparable. */
+  private[operators] val kmeansTarget = Store.value("kmeans_target") { (s, dir) =>
+    import org.apache.spark.ml.clustering.KMeans
+    // the seeded init + 5 Lloyd iterations rescan the input unless
+    // cached; the fit is eager, so unpersist right after it
+    val f = rawFeats(s, dir).persist()
+    try new KMeans().setK(10).setSeed(42L).setMaxIter(5)
+      .setFeaturesCol("raw").setPredictionCol("target").fit(f)
+    finally f.unpersist(false)
+  }
 
-  private def kmeansTarget(s: SparkSession,
-      dir: String): org.apache.spark.ml.clustering.KMeansModel =
-    kmTargetMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir,
-      _ => {
-        import org.apache.spark.ml.clustering.KMeans
-        // the seeded init + 5 Lloyd iterations rescan the input unless
-        // cached; the fit is eager, so unpersist right after it
-        val f = rawFeats(s, dir).persist()
-        try new KMeans().setK(10).setSeed(42L).setMaxIter(5)
-          .setFeaturesCol("raw").setPredictionCol("target").fit(f)
-        finally f.unpersist(false)
-      })
-
-  /** Shared accessors for sibling ML-wrapper modules (Pipeline10's
-    * RandomForest evaluator reuses the same feature frame and seeded
-    * KMeans target so its confusion readout is comparable with
-    * q_ml_eval_accuracy's LR baseline). */
+  /** Shared feature frame for sibling ML-wrapper modules. */
   private[operators] def sharedRawFeats(s: SparkSession, dir: String): DataFrame =
     rawFeats(s, dir)
-  private[operators] def sharedKmeansTarget(s: SparkSession,
-      dir: String): org.apache.spark.ml.clustering.KMeansModel =
-    kmeansTarget(s, dir)
-
-  /** ONE fitted Pipeline(StandardScaler -> LR) per (session, sfDir),
-    * shared by q_ml_pipeline_scaler_lr and q_ml_pipeline_persist (the
-    * r11 save/load round-trip needs the SAME model object to compare
-    * against, and the seeded fit is a per-dataset artifact like the
-    * KMeans target above — built once, warmed untimed by Bench). */
-  private val scalerLrMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.ml.PipelineModel]()
 
   /** (vec_id, label, raw) — the labeled feature frame the scaler->LR
     * pipeline trains on and transforms. */
@@ -81,47 +62,29 @@ object VectorOps extends graft.QueryModule {
     emb(s, dir).select(col("vec_id"),
       col("label").cast("double").as("label"), toVec(col("e")).as("raw"))
 
-  private[operators] def scalerLrModel(s: SparkSession,
-      dir: String): org.apache.spark.ml.PipelineModel =
-    scalerLrMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir,
-      _ => {
-        import org.apache.spark.ml.Pipeline
-        import org.apache.spark.ml.classification.LogisticRegression
-        import org.apache.spark.ml.feature.StandardScaler
-        // scaler fit + LR fit each rescan unless cached; the fit is
-        // eager, so unpersist right after
-        val feats = lrFeats(s, dir).persist()
-        val pipe = new Pipeline().setStages(Array(
-          new StandardScaler().setInputCol("raw").setOutputCol("features")
-            .setWithMean(true).setWithStd(true),
-          // maxIter bounded like the KMeans wrapper: accuracy plateaus
-          // in a few L-BFGS rounds on this corpus; the cap keeps the
-          // run-once cost deterministic
-          new LogisticRegression().setMaxIter(5).setRegParam(0.01)))
-        try pipe.fit(feats) finally feats.unpersist(false)
-      })
-
-  /** Bench warmup hook: force the shared seeded fits untimed (the
-    * KMeans target, the scaler->LR pipeline, and — explicit per
-    * ADVICE r10 — Pipeline10's memoized RandomForest: each is a
-    * per-dataset model artifact like the bucketed table layout,
-    * built once per (session, sfDir); declaring them here makes the
-    * fit-excluded budgets a protocol decision, not a memoization
-    * side effect). */
-  def warmSharedFits(s: SparkSession, dir: String): Unit = {
-    kmeansTarget(s, dir); scalerLrModel(s, dir)
-    Pipeline10.rfModel(s, dir)
-    // the seeded block-ALS factorization (r12): shared by the probe
-    // readout and the recommendForAllUsers batch scorer — the model
-    // artifact is built once untimed; both keys time their readouts
-    Pipeline10.alsArtifacts(s, dir)
-    // the FPGrowth full-lattice mine (r13): shared by the itemset
-    // readout and the association-rules readout — the board's
-    // heaviest fit (~21 CPU-s at sf0.1) built once untimed; both
-    // keys time their readouts over the support-sized lattice frame
-    Pipeline10.fpArtifacts(s, dir); ()
+  /** ONE fitted Pipeline(StandardScaler -> LR) per (session, sfDir),
+    * shared by q_ml_pipeline_scaler_lr and q_ml_pipeline_persist (the
+    * r11 save/load round-trip needs the SAME model object to compare
+    * against, and the seeded fit is a per-dataset artifact like the
+    * KMeans target above — built once, warmed untimed by Bench). */
+  private[operators] val scalerLrModel = Store.value("scaler_lr") { (s, dir) =>
+    import org.apache.spark.ml.Pipeline
+    import org.apache.spark.ml.classification.LogisticRegression
+    import org.apache.spark.ml.feature.StandardScaler
+    // scaler fit + LR fit each rescan unless cached; the fit is
+    // eager, so unpersist right after
+    val feats = lrFeats(s, dir).persist()
+    val pipe = new Pipeline().setStages(Array(
+      new StandardScaler().setInputCol("raw").setOutputCol("features")
+        .setWithMean(true).setWithStd(true),
+      // maxIter bounded like the KMeans wrapper: accuracy plateaus
+      // in a few L-BFGS rounds on this corpus; the cap keeps the
+      // run-once cost deterministic
+      new LogisticRegression().setMaxIter(5).setRegParam(0.01)))
+    try pipe.fit(feats) finally feats.unpersist(false)
   }
+
+  override def artifacts: Seq[Store.Artifact[_]] = Seq(kmeansTarget, scalerLrModel)
 
   /** Brute-force cosine top-5 for 20 probe vectors — the exactness
     * baseline. Probes are broadcast; corpus side is a single scan.

@@ -43,54 +43,59 @@ object Sources extends graft.QueryModule {
         col("l_returnflag"),
         date_format(col("l_shipdate"), "yyyy-MM-dd HH:mm:ss").as("ship_ts"))
 
-  // Write once per (session, sfDir) output dir (Store.scopedPath /
-  // Store.writeOnce): like the bucketed-layout DDL, the file layout is
-  // a one-time side effect — the graded roundtrip semantic is that the
-  // re-READ content matches the source of truth, which every repeat
-  // still verifies. Bench warms these untimed so the timed pass
+  // Each written layout is a files artifact, written once per context:
+  // like the bucketed-layout DDL, the file layout is a one-time side
+  // effect, and the graded roundtrip semantic is that the re-READ
+  // content matches the source of truth, which every repeat still
+  // verifies. Bench warms the artifacts untimed so the timed pass
   // measures the read path (VERDICT r4 task 6).
 
-  /** Write a lineitem sample as CSV, re-read with an explicit schema. */
-  def csvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Store.scopedPath(s, dir, "csv_roundtrip")
-    Store.writeOnce(s, out) {
-      sample(s, dir).write.mode("overwrite").option("header", "true").csv(out)
-    }
-    s.read.schema(roundtripSchema).option("header", "true").csv(out)
-      .orderBy("l_orderkey", "l_linenumber")
+  private val csvFiles = Store.files("csv_roundtrip") { (s, dir, out) =>
+    sample(s, dir).write.mode("overwrite").option("header", "true").csv(out)
+  }
+  private val jsonFiles = Store.files("json_roundtrip") { (s, dir, out) =>
+    sample(s, dir).write.mode("overwrite").json(out)
+  }
+  private val orcFiles = Store.files("orc_roundtrip") { (s, dir, out) =>
+    sample(s, dir).write.mode("overwrite").orc(out)
+  }
+  private val xmlFiles = Store.files("xml_roundtrip") { (s, dir, out) =>
+    sample(s, dir).write.mode("overwrite")
+      .option("rootTag", "rows").option("rowTag", "row").xml(out)
+  }
+  private val textFiles = Store.files("text_roundtrip") { (s, dir, out) =>
+    Tables.documents(s, dir)
+      .select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
+      .write.mode("overwrite").text(out)
   }
 
-  /** Same via JSON lines. */
-  def jsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Store.scopedPath(s, dir, "json_roundtrip")
-    Store.writeOnce(s, out) { sample(s, dir).write.mode("overwrite").json(out) }
-    s.read.schema(roundtripSchema).json(out)
+  override def artifacts: Seq[Store.Artifact[_]] =
+    Seq(csvFiles, jsonFiles, orcFiles, xmlFiles, textFiles)
+
+  /** Write a lineitem sample as CSV, re-read with an explicit schema. */
+  def csvRoundtrip(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(roundtripSchema).option("header", "true").csv(csvFiles(s, dir))
       .orderBy("l_orderkey", "l_linenumber")
-  }
+
+  /** Same via JSON lines. */
+  def jsonRoundtrip(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(roundtripSchema).json(jsonFiles(s, dir))
+      .orderBy("l_orderkey", "l_linenumber")
 
   /** Same via ORC — the other columnar format Spark ships natively;
     * types survive in the file's own schema (no re-read schema needed,
     * unlike the text formats). The oracle is the same source-of-truth
     * SQL: it checks the written+read content, not the container. */
-  def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Store.scopedPath(s, dir, "orc_roundtrip")
-    Store.writeOnce(s, out) { sample(s, dir).write.mode("overwrite").orc(out) }
-    s.read.orc(out).orderBy("l_orderkey", "l_linenumber")
-  }
+  def orcRoundtrip(s: SparkSession, dir: String): DataFrame =
+    s.read.orc(orcFiles(s, dir)).orderBy("l_orderkey", "l_linenumber")
 
   /** Same via XML — Spark 4's built-in XML source (one `row` element
     * per record under a `rows` root). Re-read with the explicit schema
     * like the other text formats; rowTag is the only knob the reader
     * needs. The oracle is the same source-of-truth SQL. */
-  def xmlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Store.scopedPath(s, dir, "xml_roundtrip")
-    Store.writeOnce(s, out) {
-      sample(s, dir).write.mode("overwrite")
-        .option("rootTag", "rows").option("rowTag", "row").xml(out)
-    }
-    s.read.schema(roundtripSchema).option("rowTag", "row").xml(out)
+  def xmlRoundtrip(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(roundtripSchema).option("rowTag", "row").xml(xmlFiles(s, dir))
       .orderBy("l_orderkey", "l_linenumber")
-  }
 
   /** Raw TEXT lines — the format raw corpora actually arrive in: one
     * doc per line as `id<TAB>text`, written with .text() and re-read
@@ -99,19 +104,12 @@ object Sources extends graft.QueryModule {
     * (a real ingest would escape or length-prefix). The oracle checks
     * the written+read content against the source-of-truth parquet,
     * like the other roundtrips. */
-  def textRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Store.scopedPath(s, dir, "text_roundtrip")
-    Store.writeOnce(s, out) {
-      Tables.documents(s, dir)
-        .select(concat_ws("\t", col("doc_id"), col("text")).as("value"))
-        .write.mode("overwrite").text(out)
-    }
-    s.read.text(out)
+  def textRoundtrip(s: SparkSession, dir: String): DataFrame =
+    s.read.text(textFiles(s, dir))
       .select(
         expr("CAST(split(value, '\t', 2)[0] AS BIGINT)").as("doc_id"),
         expr("split(value, '\t', 2)[1]").as("text"))
       .orderBy("doc_id")
-  }
 
   private val sampleSql =
     """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag,

@@ -17,7 +17,7 @@ class Pipeline22Spec extends AnyFunSuite {
 
   private def graphEdges(): Set[(Long, Long)] = {
     import operators.TextOps
-    spark.read.parquet(TextOps.ensureFullPairs(spark, dir))
+    spark.read.parquet(TextOps.fullPairs(spark, dir))
       .where(col("matches") >= 8).select("d1", "d2").collect()
       .flatMap(r => Seq(r.getLong(0) -> r.getLong(1),
         r.getLong(1) -> r.getLong(0))).toSet

@@ -78,10 +78,10 @@ class Pipeline25Spec extends AnyFunSuite {
       val b = run("q_graph_lpa").collect().map(_.toString).sorted
       assert(a.sameElements(b), "fixed-round LPA must be deterministic")
       val cc = spark.read.parquet(
-        operators.TextOps.ensureFullCc(spark, dir))
+        operators.TextOps.fullCc(spark, dir))
       // a final label reaches only nodes within 4 hops of its origin,
       // so every LPA community must lie inside ONE stored component
-      val pairsPath = operators.TextOps.ensureFullPairs(spark, dir)
+      val pairsPath = operators.TextOps.fullPairs(spark, dir)
       val pairs = spark.read.parquet(pairsPath)
         .where(col("matches") >= 8)
       val und = pairs.select(col("d1").as("src"), col("d2").as("dst"))

@@ -17,7 +17,7 @@ class Pipeline26Spec extends AnyFunSuite {
     val lpa = run("q_graph_lpa").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val pairs = spark.read.parquet(
-        operators.TextOps.ensureFullPairs(spark, dir))
+        operators.TextOps.fullPairs(spark, dir))
       .where(col("matches") >= 8)
     val m = pairs.count()
     // same communities, same sizes, same intra-edge counts as the
@@ -42,7 +42,7 @@ class Pipeline26Spec extends AnyFunSuite {
   test("degree dist: node and edge totals conserve; shares cap at 1e6") {
     val hist = run("q_graph_degree_dist").collect()
     val pairs = spark.read.parquet(
-        operators.TextOps.ensureFullPairs(spark, dir))
+        operators.TextOps.fullPairs(spark, dir))
       .where(col("matches") >= 8)
     val m = pairs.count()
     val nodes = pairs.select(col("d1").as("n"))

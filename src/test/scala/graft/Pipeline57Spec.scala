@@ -47,7 +47,7 @@ class Pipeline57Spec extends AnyFunSuite {
 
   test("rich club: phi from an exact edge scan; monotone-ish core") {
     val pairs = spark.read
-      .parquet(operators.TextOps.ensureFullPairs(spark, dir))
+      .parquet(operators.TextOps.fullPairs(spark, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val deg = (pairs.map(_._1) ++ pairs.map(_._2))

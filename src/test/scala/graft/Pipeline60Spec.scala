@@ -61,7 +61,7 @@ class Pipeline60Spec extends AnyFunSuite {
 
   test("avg neighbor degree: exact per-class re-derivation") {
     val pairs = spark.read
-      .parquet(operators.TextOps.ensureFullPairs(spark, dir))
+      .parquet(operators.TextOps.fullPairs(spark, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = (pairs ++ pairs.map(p => (p._2, p._1)))

@@ -13,7 +13,7 @@ class Pipeline70Spec extends AnyFunSuite {
 
   test("recursive reach: BFS re-derivation over the collected graph") {
     val pairs = spark.read
-      .parquet(operators.TextOps.ensureFullPairs(spark, dir))
+      .parquet(operators.TextOps.fullPairs(spark, dir))
       .where(col("matches") >= 8).select("d1", "d2")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adj = (pairs ++ pairs.map(_.swap))

@@ -103,7 +103,7 @@ class Pipeline7Spec extends AnyFunSuite {
     val probes = docs.where(pmod(col("doc_id"), lit(7)) === 0)
     val block = Seq("slow", "error").toDF("word")
     val sigs = spark.read.parquet(
-      operators.TextOps.ensureFullSigs(spark, dir))
+      operators.TextOps.fullSigs(spark, dir))
     val mixed = api.Sample.temperatureCap(
       api.Profile.pipelineSurvivors(train, "doc_id", "text", block,
           probes, operators.TextOps.permTable,

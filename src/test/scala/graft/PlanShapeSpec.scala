@@ -154,7 +154,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // with one (doc_id, perm, minh) row per signature slot, and the
     // graded read goes through that path.
     SparkEntry.queries("q_dedup_jaccard")(spark, dir)
-    val path = operators.TextOps.ensureFullSigs(spark, dir)
+    val path = operators.TextOps.fullSigs(spark, dir)
     assert(path.contains("graft_full_sigs"))
     val stored = spark.read.parquet(path)
     assert(stored.columns.sorted.toSeq == Seq("doc_id", "minh", "perm"))

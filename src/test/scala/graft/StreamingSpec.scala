@@ -117,6 +117,12 @@ class SessionizerProcessor(gapMs: Long)
 }
 
 class StreamingSpec extends AnyFunSuite {
+  /** A fresh directory under java.io.tmpdir, deleted after `body`. */
+  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    try body(d.toString) finally org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
+  }
+
   private def spark = TestSpark.spark
   private val dir = TestSpark.sf0001
 
@@ -597,33 +603,33 @@ class StreamingSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     implicit val sql = sp.sqlContext
-    val tag = java.lang.Long.toHexString(System.nanoTime())
-    val outDir = s"${System.getProperty("java.io.tmpdir")}/graft_fsink_$tag"
-    val ckDir = s"${System.getProperty("java.io.tmpdir")}/graft_fsink_ck_$tag"
-    val data = eventsSample()
-    val (a, b) = data.splitAt(data.size / 2)
-    val mem = MemoryStream[Ev]
-    def agg(df: org.apache.spark.sql.DataFrame) = df
-      .withWatermark("ts", "1 minute")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("ws"), col("event_type"), col("cnt"))
-    def start() = agg(mem.toDF()).writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode(OutputMode.Append()).start()
-    val q1 = start()
-    try { mem.addData(a); q1.processAllAvailable() } finally q1.stop()
-    val q2 = start()
-    try { mem.addData(b); q2.processAllAvailable() } finally q2.stop()
-    // append mode only emits windows the watermark has closed; compute
-    // the closed set from the fed data and compare against the batch twin
-    val maxTs = data.map(_.ts.getTime).max
-    val closed = col("ws") < new Timestamp(
-      (maxTs - 60 * 1000) / 3600000 * 3600000)
-    val streamed = sp.read.parquet(outDir).where(closed)
-    val batch = agg(Tables.events(spark, dir)).where(closed)
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
-      "file-sink restart diverged from batch twin on closed windows")
+    withTempDir("graft_fsink") { tmp =>
+      val (outDir, ckDir) = (s"$tmp/out", s"$tmp/ck")
+      val data = eventsSample()
+      val (a, b) = data.splitAt(data.size / 2)
+      val mem = MemoryStream[Ev]
+      def agg(df: org.apache.spark.sql.DataFrame) = df
+        .withWatermark("ts", "1 minute")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"))
+        .select(col("window.start").as("ws"), col("event_type"), col("cnt"))
+      def start() = agg(mem.toDF()).writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckDir)
+        .outputMode(OutputMode.Append()).start()
+      val q1 = start()
+      try { mem.addData(a); q1.processAllAvailable() } finally q1.stop()
+      val q2 = start()
+      try { mem.addData(b); q2.processAllAvailable() } finally q2.stop()
+      // append mode only emits windows the watermark has closed; compute
+      // the closed set from the fed data and compare against the batch twin
+      val maxTs = data.map(_.ts.getTime).max
+      val closed = col("ws") < new Timestamp(
+        (maxTs - 60 * 1000) / 3600000 * 3600000)
+      val streamed = sp.read.parquet(outDir).where(closed)
+      val batch = agg(Tables.events(spark, dir)).where(closed)
+      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+        "file-sink restart diverged from batch twin on closed windows")
+    }
   }
 
   test("transformWithState (Spark 4 StatefulProcessor) == batch per-user agg") {
@@ -794,33 +800,33 @@ class StreamingSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     implicit val sql = sp.sqlContext
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-febatch").toString
-    val data = eventsSample().take(200)
-    def idempotentSink(df: DataFrame, batchId: Long): Unit =
-      df.groupBy("event_type").agg(count(lit(1)).as("n"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-    val mem = MemoryStream[Ev]
-    val q = mem.toDF().writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(idempotentSink _)
-      .start()
-    try { mem.addData(data); q.processAllAvailable() } finally q.stop()
-    val batchDirs = new java.io.File(out)
-      .listFiles().filter(_.getName.startsWith("batch_id=")).map(_.getName)
-    assert(batchDirs.toSeq == Seq("batch_id=0"), batchDirs.mkString(","))
-    val first = spark.read.parquet(s"$out/batch_id=0")
-      .collect().map(_.toString).sorted.toSeq
-    // REPLAY batch 0 — the same rows, the same batchId, as the
-    // restarted query would re-feed them
-    idempotentSink(data.toDF(), 0L)
-    val replayed = spark.read.parquet(s"$out/batch_id=0")
-      .collect().map(_.toString).sorted.toSeq
-    assert(replayed == first, "replay must be byte-identical, not append")
-    // and the total output across the sink is still exactly one batch
-    assert(new java.io.File(out).listFiles()
-      .count(_.getName.startsWith("batch_id=")) == 1)
+    withTempDir("graft-febatch") { out =>
+      val data = eventsSample().take(200)
+      def idempotentSink(df: DataFrame, batchId: Long): Unit =
+        df.groupBy("event_type").agg(count(lit(1)).as("n"))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      val mem = MemoryStream[Ev]
+      val q = mem.toDF().writeStream
+        .outputMode(OutputMode.Update())
+        .foreachBatch(idempotentSink _)
+        .start()
+      try { mem.addData(data); q.processAllAvailable() } finally q.stop()
+      val batchDirs = new java.io.File(out)
+        .listFiles().filter(_.getName.startsWith("batch_id=")).map(_.getName)
+      assert(batchDirs.toSeq == Seq("batch_id=0"), batchDirs.mkString(","))
+      val first = spark.read.parquet(s"$out/batch_id=0")
+        .collect().map(_.toString).sorted.toSeq
+      // REPLAY batch 0 — the same rows, the same batchId, as the
+      // restarted query would re-feed them
+      idempotentSink(data.toDF(), 0L)
+      val replayed = spark.read.parquet(s"$out/batch_id=0")
+        .collect().map(_.toString).sorted.toSeq
+      assert(replayed == first, "replay must be byte-identical, not append")
+      // and the total output across the sink is still exactly one batch
+      assert(new java.io.File(out).listFiles()
+        .count(_.getName.startsWith("batch_id=")) == 1)
+    }
   }
 
   test("trigger modes: AvailableNow drains existing input then " +
@@ -828,37 +834,37 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     val sp = spark
     import sp.implicits._
-    val in = java.nio.file.Files
-      .createTempDirectory("graft-trigger-in").toString
-    val sample = eventsSample()
-    sample.toDF().coalesce(1).write.mode("overwrite").parquet(in)
-    val expected = sample.groupBy(_.event_type)
-      .map { case (t, es) => (t, es.size.toLong) }.toMap
-    def counts(table: String): Map[String, Long] =
-      sp.table(table).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val src = sp.readStream.schema(Tables.events(spark, dir).schema)
-      .parquet(in)
-      .groupBy("event_type").agg(count(lit(1)).as("n"))
-    // AvailableNow: batch-like operation of a streaming pipeline —
-    // process everything that exists, then stop without an external
-    // stop() signal (the backfill/cron half of a streaming helper)
-    val qa = src.writeStream.format("memory").queryName("t_avnow")
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow()).start()
-    assert(qa.awaitTermination(120000),
-      "AvailableNow query must terminate on its own")
-    assert(counts("t_avnow") == expected)
-    // ProcessingTime: the continuous mode — same result, but the query
-    // stays active until stopped
-    val qp = src.writeStream.format("memory").queryName("t_proctime")
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.ProcessingTime(0L)).start()
-    try {
-      qp.processAllAvailable()
-      assert(qp.isActive, "ProcessingTime query must stay live")
-      assert(counts("t_proctime") == expected)
-    } finally qp.stop()
+    withTempDir("graft-trigger-in") { in =>
+      val sample = eventsSample()
+      sample.toDF().coalesce(1).write.mode("overwrite").parquet(in)
+      val expected = sample.groupBy(_.event_type)
+        .map { case (t, es) => (t, es.size.toLong) }.toMap
+      def counts(table: String): Map[String, Long] =
+        sp.table(table).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val src = sp.readStream.schema(Tables.events(spark, dir).schema)
+        .parquet(in)
+        .groupBy("event_type").agg(count(lit(1)).as("n"))
+      // AvailableNow: batch-like operation of a streaming pipeline —
+      // process everything that exists, then stop without an external
+      // stop() signal (the backfill/cron half of a streaming helper)
+      val qa = src.writeStream.format("memory").queryName("t_avnow")
+        .outputMode(OutputMode.Complete())
+        .trigger(Trigger.AvailableNow()).start()
+      assert(qa.awaitTermination(120000),
+        "AvailableNow query must terminate on its own")
+      assert(counts("t_avnow") == expected)
+      // ProcessingTime: the continuous mode — same result, but the query
+      // stays active until stopped
+      val qp = src.writeStream.format("memory").queryName("t_proctime")
+        .outputMode(OutputMode.Complete())
+        .trigger(Trigger.ProcessingTime(0L)).start()
+      try {
+        qp.processAllAvailable()
+        assert(qp.isActive, "ProcessingTime query must stay live")
+        assert(counts("t_proctime") == expected)
+      } finally qp.stop()
+    }
   }
 
   test("chained stateful aggregation (two stacked window aggs, append) == batch twin on closed windows") {

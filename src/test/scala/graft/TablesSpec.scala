@@ -44,7 +44,7 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.lineitem(spark, dir).schema("l_shipdate").dataType
       == TimestampType)
     // the NTZ branch produces the same instants a drifted fixture would
-    val out = sources.Store.scopedPath(spark, dir, "tables_spec_ntz_ord")
+    val out = sources.Store.path(spark, "tables_spec_ntz_ord")
     Tables.orders(spark, dir)
       .withColumn("o_orderdate", col("o_orderdate").cast(TimestampNTZType))
       .write.mode("overwrite").parquet(out)
@@ -62,7 +62,7 @@ class TablesSpec extends AnyFunSuite {
     // events table, read it raw, and check the cast the loader applies is
     // value-identical (same micros) to the normalized loader output.
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
-    val out = sources.Store.scopedPath(spark, dir, "tables_spec_ntz")
+    val out = sources.Store.path(spark, "tables_spec_ntz")
     Tables.events(spark, dir)
       .withColumn("ts", col("ts").cast(TimestampNTZType))
       .write.mode("overwrite").parquet(out)
@@ -139,10 +139,10 @@ class TablesSpec extends AnyFunSuite {
 
   test("store-once artifacts read through Tables.read return the raw read's rows") {
     val sp = spark.newSession()
-    val pairs = graft.operators.TextOps.ensureFullPairs(sp, dir)
+    val pairs = graft.operators.TextOps.fullPairs(sp, dir)
     // a partitioned artifact too: its partition column comes from the
     // directory names, not from the files
-    val parted = sources.Store.scopedPath(sp, dir, "tables_spec_parted")
+    val parted = sources.Store.path(sp, "tables_spec_parted")
     Tables.orders(sp, dir).select("o_orderkey", "o_totalprice", "o_orderstatus")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(parted)
     try {
