@@ -40,8 +40,7 @@ object Bench {
       // machinery (the driver's r5 recording attributed ~5 CPU-s of
       // this to q_text_stats; quiet re-runs read ~7 vs its 12.6).
       Tables.t(spark, sfDir, "documents").limit(64)
-        .select(explode(expr(
-          "filter(split(lower(text), ' '), x -> x <> '')")).as("token"))
+        .select(explode(api.Text.tokenArray("text")).as("token"))
         .groupBy("token").count().count()
     }
     // Untimed: every shared artifact the modules declare (store-once

@@ -12,11 +12,41 @@ import org.apache.spark.sql.functions._
   */
 object Text {
 
+  /** The engine's one tokenizer: a text column lowercased and split on
+    * single spaces, empty tokens (from runs of spaces) dropped — the
+    * token array every tokens/n-gram/vocabulary operator reads. The
+    * SQL text is fixed: callers' plans (and the DuckDB oracle's
+    * `str_split(lower(text), ' ')` + `<> ''` twin) depend on it. */
+  def tokenArray(textCol: String): Column =
+    expr(s"filter(split(lower($textCol), ' '), x -> x <> '')")
+
+  /** The raw lowercase single-space split, empties KEPT — for callers
+    * that need the raw word position (ordinals, shingle windows). */
+  def words(textCol: String): Column = split(lower(col(textCol)), " ")
+
+  /** Consecutive n-grams of a token-array column: the space-joined
+    * windows in order, repeats kept; an array shorter than `n` gives
+    * []. n = 1 is the array itself. */
+  def ngrams(arrCol: String, n: Int): Column =
+    if (n == 1) col(arrCol)
+    else expr(s"case when size($arrCol) < $n then array()" +
+      s" else ${ngramsSql(arrCol, n)} end")
+
+  /** The unguarded transform behind [[ngrams]], for callers that have
+    * already dropped arrays shorter than `n`: Spark's `sequence`
+    * descends when stop < start, so a short array would yield null
+    * grams instead of none. */
+  private[api] def ngramsSql(arrCol: String, n: Int): String = {
+    val parts = (0 until n).map(j => s"$arrCol[i + ${j - 1}]").mkString(", ' ', ")
+    s"transform(sequence(1, size($arrCol) - ${n - 1}), i -> concat($parts))"
+  }
+
   /** Whitespace tokens with a 1-based ordinal per row (lowercased,
-    * empties dropped). Output: (idCol, ord, token). */
+    * empties dropped; the ordinal is the raw word position, so it
+    * counts the dropped empties). Output: (idCol, ord, token). */
   def tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
-      .select(col(idCol), posexplode(split(lower(col(textCol)), " ")))
+      .select(col(idCol), posexplode(words(textCol)))
       .where(col("col") =!= "")
       .select(col(idCol), (col("pos") + 1).cast("long").as("ord"),
         col("col").as("token"))
@@ -71,15 +101,11 @@ object Text {
 
   /** Distinct k-word shingles per row. Output: (idCol, shingle). */
   def shingles(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 3): DataFrame = {
-    val parts = (0 until k).map(j => s"l[i + ${j - 1}]").mkString(", ' ', ")
+      k: Int = 3): DataFrame =
     docs
-      .withColumn("l", split(lower(col(textCol)), " "))
+      .withColumn("l", words(textCol))
       .where(size(col("l")) >= k)
-      .select(col(idCol), explode(expr(
-        s"array_distinct(transform(sequence(1, size(l) - ${k - 1}), " +
-          s"i -> concat($parts)))")).as("shingle"))
-  }
+      .select(col(idCol), explode(Dedup.shingleArray("l", k)).as("shingle"))
 
   /** TF-IDF per (id, token) with MLlib's smoothed formula
     * idf = ln((N+1)/(df+1)). One tokenize pass — literally: df is a
@@ -136,9 +162,7 @@ object Text {
     // and the filtered position is order-isomorphic to the raw
     // ordinal, so the fold (and every output double) is unchanged.
     val bi = docs
-      .select(col(idCol),
-        expr(s"filter(split(lower($textCol), ' '), x -> x <> '')")
-          .as("__ts"))
+      .select(col(idCol), tokenArray(textCol).as("__ts"))
       .where(size(col("__ts")) >= 2)
       .select(col(idCol), posexplode(expr(
         "transform(sequence(1, size(__ts) - 1)," +
@@ -298,8 +322,7 @@ object Text {
       sum(col(nCharsCol)).as("sum_chars"))
     val vocab = docs
       .select(col(strataCol),
-        explode(expr(s"filter(split(lower($textCol), ' '), x -> x <> '')"))
-          .as("token"))
+        explode(tokenArray(textCol)).as("token"))
       .groupBy(strataCol).agg(count(lit(1)).as("sum_tokens"),
         nd.as("vocab_size"))
     // ppm numerators in DECIMAL(38,0): 1000000 * sum_chars overflows
@@ -388,8 +411,7 @@ object Text {
       minCount: Long = 3L, k: Int = 50): DataFrame = {
     val toks = tokens(docs, idCol, textCol)
     val pairs = docs
-      .select(expr(s"filter(split(lower($textCol), ' '), x -> x <> '')")
-        .as("__ts"))
+      .select(tokenArray(textCol).as("__ts"))
       .where(size(col("__ts")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(__ts) - 1)," +
@@ -508,15 +530,13 @@ object Dedup {
   }
 
   /** k-word shingle ARRAY per row from a pre-split token-array column —
-    * the no-explode form of Text.shingles, usable where aggregation and
-    * explode-regroup are unavailable (a STREAMING ingestion row signs
-    * itself). Caller must filter `size(tokCol) >= k` first (Spark's
-    * `sequence` descends when the computed stop < start). */
-  def shingleArray(tokCol: String, k: Int): Column = {
-    val parts = (0 until k).map(j => s"$tokCol[i + ${j - 1}]").mkString(", ' ', ")
-    expr(s"array_distinct(transform(sequence(1, size($tokCol) - ${k - 1}), " +
-      s"i -> concat($parts)))")
-  }
+    * the distinct [[Text.ngrams]], and the no-explode form of
+    * Text.shingles, usable where aggregation and explode-regroup are
+    * unavailable (a STREAMING ingestion row signs itself). Caller must
+    * filter `size(tokCol) >= k` first (it is the unguarded n-gram
+    * transform: Spark's `sequence` descends when stop < start). */
+  def shingleArray(tokCol: String, k: Int): Column =
+    expr(s"array_distinct(${Text.ngramsSql(tokCol, k)})")
 
   /** Per-ROW MinHash signature (array<bigint>, one slot per perm, in
     * perm order) from a shingle-array column — the aggregation-free
@@ -766,8 +786,7 @@ object Dedup {
   def chunkSplit(docs: DataFrame, idCol: String, textCol: String,
       w: Int = 32): DataFrame =
     docs
-      .withColumn("__l",
-        expr(s"filter(split(lower($textCol), ' '), x -> x <> '')"))
+      .withColumn("__l", Text.tokenArray(textCol))
       .where(size(col("__l")) >= 1)
       .select(col(idCol), posexplode(expr(
         s"transform(sequence(0, (size(__l) - 1) div $w), " +
@@ -841,7 +860,7 @@ object Dedup {
   def spanDuplicates(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame =
     docs
-      .withColumn("__l", split(lower(col(textCol)), " "))
+      .withColumn("__l", Text.words(textCol))
       .where(size(col("__l")) >= n)
       .select(col(idCol), posexplode(expr(
         s"transform(sequence(0, size(__l) - $n), " +
@@ -884,6 +903,24 @@ object Dedup {
 }
 
 object Vec {
+
+  /** The shared int8 grid of the embedding evals: per dimension
+    * floor(x·127) as bigint — floor has no half-way tie, so each
+    * integer is engine-exact on identical doubles. Output:
+    * array<bigint>. */
+  def q127(vecCol: String): Column =
+    expr(s"transform(cast($vecCol as array<double>)," +
+      " x -> cast(floor(x * 127.0D) as bigint))")
+
+  /** Σ of [[q127]] over the dimensions, by the native
+    * `graft_q127_sum` kernel (one codegen'd loop per row; the same
+    * ascending-index fold as the HOF pair, VectorExprsSpec pins it
+    * bit-for-bit). Output: bigint. */
+  def q127Sum(vecCol: String): Column = {
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .foreach(graft.GraftExtensions.register)
+    expr(s"graft_q127_sum(cast($vecCol as array<double>))")
+  }
 
   /** Int8 quantization (the storage-shrink step before ANN indexing):
     * per-`groupCol` max-abs scale, q = floor(x*127/mx) — floor has no

@@ -131,12 +131,10 @@ object ExtraText extends graft.QueryModule {
     // materialized pass). Same leak-free pattern as dedupJaccard /
     // connectedComponents; ContextCleaner frees the checkpoint RDD.
     val g = Tables.documents(s, dir)
-      .withColumn("l", split(lower(col("text")), " "))
+      .withColumn("l", graft.api.Text.words("text"))
       .where(size(col("l")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(l)-3), " +
-          "i -> concat(l[i-1], ' ', l[i], ' ', l[i+1], ' ', l[i+2])))"))
-        .as("gram"))
+      .select(col("doc_id"),
+        explode(graft.api.Dedup.shingleArray("l", 4)).as("gram"))
       .localCheckpoint(true)
     val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     // plain equi-join here, NOT the group-then-pair shape used by
@@ -236,11 +234,8 @@ object ExtraText extends graft.QueryModule {
         count(lit(1)).as("nd_tok"),
         max(col("c")).as("top_c"))
     val bi = docs
-      .withColumn("l", expr("filter(split(lower(text), ' '), x -> x <> '')"))
-      .where(size(col("l")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(l) - 1), " +
-          "i -> concat(l[i-1], ' ', l[i]))")).as("g"))
+      .withColumn("l", graft.api.Text.tokenArray("text"))
+      .select(col("doc_id"), explode(graft.api.Text.ngrams("l", 2)).as("g"))
       .groupBy("doc_id", "g").agg(count(lit(1)).as("c2"))
       .groupBy("doc_id")
       .agg(sum(col("c2")).as("n_bi"), count(lit(1)).as("nd_bi"))

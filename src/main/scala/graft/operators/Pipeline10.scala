@@ -187,7 +187,7 @@ object Pipeline10 extends graft.QueryModule {
     import org.apache.spark.ml.feature.Word2Vec
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
+        graft.api.Text.tokenArray("text").as("toks"))
     val probes = toks.select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .where(col("c") >= 5)
@@ -318,8 +318,7 @@ object Pipeline10 extends graft.QueryModule {
     * green, plus the same grouped arithmetic. */
   def graphComponentsStats(s: SparkSession, dir: String): DataFrame = {
     val cc = Tables.read(s, TextOps.fullCc(s, dir))
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select(col("d1"), col("d2"))
+    val pairs = TextOps.nearDupPairs(s, dir)
     val nodes = cc.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), max("node").as("max_doc"))
     val edges = pairs

@@ -201,16 +201,10 @@ object Pipeline12 extends graft.QueryModule {
     * half-way tie, so the int is engine-exact on identical doubles);
     * label_bin = (label ≥ 5). Score domain is [−8128, 8128] by the
     * ±0.5 fixture range × 64 dims. */
-  private[graft] def scored(s: SparkSession, dir: String): DataFrame = {
-    // r17: native graft_q127_sum kernel replaces the interpreted
-    // aggregate(transform(...)) HOF pair — identical ascending-index
-    // (long) floor(x·127) fold, one codegen'd loop per row (guide §4;
-    // VectorExprsSpec pins bit-equality on the fixture corpus).
+  private[graft] def scored(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), (col("label") >= 5).as("pos"),
-        expr("graft_q127_sum(cast(embedding as array<double>))")
-          .as("score"))
-  }
+        graft.api.Vec.q127Sum("embedding").as("score"))
 
   /** ROC AUC of the int8 embedding score against the binary label —
     * the rank-sum (Mann-Whitney) identity with exact tie handling:

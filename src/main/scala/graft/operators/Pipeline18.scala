@@ -29,9 +29,7 @@ object Pipeline18 extends graft.QueryModule {
   private def labeled(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"),
-        expr("aggregate(transform(cast(embedding as array<double>)," +
-          " x -> cast(floor(x * 127.0D) as bigint)), 0L," +
-          " (a, x) -> a + x)").as("score"))
+        graft.api.Vec.q127Sum("embedding").as("score"))
       .withColumn("bucket", expr("(score + 8192L) div 1024"))
 
   /** MULTICLASS CONFUSION MATRIX + per-class precision/recall/F1
@@ -374,7 +372,7 @@ object Pipeline18 extends graft.QueryModule {
     import sp.implicits._
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
+        graft.api.Text.tokenArray("text").as("toks"))
     val cached = docs.coalesce(8).persist()
     val (model, vocab) = try {
       val cv = new CountVectorizer().setInputCol("toks")

@@ -49,8 +49,7 @@ object Pipeline19 extends graft.QueryModule {
     graft.api.Ml.silhouettePpm(
         Tables.embeddings(s, dir)
           .select(col("vec_id"), col("label"),
-            expr("transform(cast(embedding as array<double>)," +
-              " x -> cast(floor(x * 127.0D) as bigint))").as("q")),
+            graft.api.Vec.q127("embedding").as("q")),
         idCol = "vec_id", qCol = "q", clusterCol = "label")
       .orderBy("cluster")
 
@@ -66,8 +65,7 @@ object Pipeline19 extends graft.QueryModule {
     * q_ml_feature_select's scan. */
   def vecSummary(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
-      .select(posexplode(expr("transform(cast(embedding as array<double>)," +
-        " x -> cast(floor(x * 127.0D) as bigint))")))
+      .select(posexplode(graft.api.Vec.q127("embedding")))
       .groupBy(col("pos").cast("long").as("dim"))
       .agg(count(lit(1)).as("n"), sum("col").as("sx"),
         sum(expr("cast(col as decimal(19,0)) * col")).as("sxx"),
@@ -96,8 +94,7 @@ object Pipeline19 extends graft.QueryModule {
     * the quantile window runs per dim on ≤192 rows. */
   def vecRobustScaler(s: SparkSession, dir: String): DataFrame = {
     val g = Tables.embeddings(s, dir)
-      .select(posexplode(expr("transform(cast(embedding as array<double>)," +
-        " x -> cast(floor(x * 127.0D) as bigint))")))
+      .select(posexplode(graft.api.Vec.q127("embedding")))
       .groupBy(col("pos").cast("long").as("dim"), col("col").as("v"))
       .agg(count(lit(1)).as("cnt"))
     val wc = org.apache.spark.sql.expressions.Window
@@ -165,8 +162,7 @@ object Pipeline19 extends graft.QueryModule {
       .select(col("vec_id"), col("target"))
       .join(Tables.embeddings(s, dir)
         .select(col("vec_id"),
-          expr("transform(cast(embedding as array<double>)," +
-            " x -> cast(floor(x * 127.0D) as bigint))").as("q")),
+          graft.api.Vec.q127("embedding").as("q")),
         "vec_id")
 
   /** DETERMINISTIC MULTIPLIER-BOOTSTRAP confidence interval for the

@@ -299,8 +299,7 @@ object Pipeline21 extends graft.QueryModule {
     * wedge and closure are all hash equi-joins. No BNLJ beyond the
     * 1-row total attaches. */
   def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
+    val pairs = TextOps.nearDupPairs(s, dir)
       .localCheckpoint() // support-sized; five consumers below
     val deg = pairs.select(col("d1").as("n"))
       .union(pairs.select(col("d2").as("n")))

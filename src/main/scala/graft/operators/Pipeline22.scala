@@ -29,12 +29,7 @@ object Pipeline22 extends graft.QueryModule {
     * edges), the textbook 100 TB BFS plan. Settled set and frontier
     * are localCheckpoint'd so round k never re-executes rounds <k. */
   def graphShortestPath(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-    val und = pairs
-      .select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(true)
+    val und = TextOps.nearDupEdges(s, dir).localCheckpoint(true)
     val seeds = und.select(col("src").as("node")).distinct
       .where(pmod(col("node"), lit(97L)) === 0)
       .select(col("node"), lit(0L).as("dist"))
@@ -69,12 +64,7 @@ object Pipeline22 extends graft.QueryModule {
     * stored pair list; the moment pass is two broadcast-joinable
     * equi-joins of edges onto the degree frame + one global agg. */
   def graphAssortativity(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-    val und = pairs
-      .select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(true)
+    val und = TextOps.nearDupEdges(s, dir).localCheckpoint(true)
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
     val m = und
       .join(deg.select(col("src"), col("deg").as("x")), "src")

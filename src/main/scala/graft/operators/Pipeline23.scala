@@ -12,13 +12,6 @@ import graft.Tables
   */
 object Pipeline23 extends graft.QueryModule {
 
-  private[operators] def undirected(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-    pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-  }
-
   /** K-CORE decomposition (k = 3, 4 fixed peeling rounds) of the
     * stored ≥8-band candidate graph — the density filter that
     * separates template cliques from incidental near-dup pairs:
@@ -35,7 +28,7 @@ object Pipeline23 extends graft.QueryModule {
     * round count (not convergence) keeps the oracle an unrolled CTE
     * chain. */
   def graphKcore(s: SparkSession, dir: String): DataFrame = {
-    var edges = undirected(s, dir).localCheckpoint(true)
+    var edges = TextOps.nearDupEdges(s, dir).localCheckpoint(true)
     for (_ <- 1 to 4) {
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= 3).select("src").localCheckpoint(true)
@@ -82,7 +75,7 @@ object Pipeline23 extends graft.QueryModule {
     * against the stored pair list and degrees attach by two more
     * equi-joins. Never all-pairs. */
   def graphCommonNeighbors(s: SparkSession, dir: String): DataFrame =
-    commonNeighborsFrom(undirected(s, dir).localCheckpoint(true))
+    commonNeighborsFrom(TextOps.nearDupEdges(s, dir).localCheckpoint(true))
 
   /** CN core over any symmetric (src, dst) edge frame — split out so
     * Pipeline23Spec can pin the hub-cap contract on a synthetic graph
@@ -204,7 +197,8 @@ object Pipeline23 extends graft.QueryModule {
     Tables.documents(s, dir)
       .crossJoin(broadcast(stop))
       .select(col("doc_id"),
-        expr("graft_rake_top(split(lower(text), ' '), stop_arr)").as("r"))
+        call_function("graft_rake_top", graft.api.Text.words("text"),
+          col("stop_arr")).as("r"))
       .where(col("r").isNotNull)
       .select(col("doc_id"), col("r.phrase").as("phrase"),
         col("r.n_words").as("n_words"),

@@ -133,9 +133,7 @@ object Pipeline25 extends graft.QueryModule {
     * key reports. */
   private[operators] def lpaParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-      .localCheckpoint(true)
+    val pairs = TextOps.nearDupPairs(s, dir).localCheckpoint(true)
     val und = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
       .localCheckpoint(true)

@@ -74,11 +74,8 @@ object Pipeline26 extends graft.QueryModule {
     * 100 TB: one hash agg over the support-sized edge list, one over
     * the degree frame. */
   def graphDegreeDist(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-    val und = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-    val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
+    val deg = TextOps.nearDupEdges(s, dir)
+      .groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint() // histogram + the bounded total count below
     val nTotal = deg.count()
     deg.groupBy("deg").agg(count(lit(1)).as("n_nodes"))

@@ -98,8 +98,7 @@ object Pipeline27 extends graft.QueryModule {
     * SAME enumeration (the decomposeParts/lpaParts precedent). */
   private[operators] def triParts(s: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
+    val pairs = TextOps.nearDupPairs(s, dir)
       .localCheckpoint() // support-sized; deg + orientation + closure
     val deg = pairs.select(col("d1").as("n"))
       .union(pairs.select(col("d2").as("n")))

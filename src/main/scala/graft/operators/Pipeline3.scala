@@ -32,9 +32,7 @@ object Pipeline3 extends graft.QueryModule {
     // verify front and PageRank read; identical arithmetic values, so
     // the oracle is unchanged). Before, this query re-ran the band
     // self-join over the stored signatures on every run.
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-    Dedup.connectedComponents(pairs, "d1", "d2")
+    Dedup.connectedComponents(TextOps.nearDupPairs(s, dir), "d1", "d2")
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
@@ -151,8 +149,7 @@ object Pipeline3 extends graft.QueryModule {
   def textPack(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
-        size(filter(split(lower(col("text")), " "),
-          t => t =!= "")).cast("long").as("n_tokens"))
+        size(graft.api.Text.tokenArray("text")).cast("long").as("n_tokens"))
     graft.api.Text.packBins(toks, "doc_id", "lang", "n_tokens", 256)
       .groupBy("lang", "bin")
       .agg(count(lit(1)).as("n_docs"),
@@ -260,8 +257,8 @@ object Pipeline3 extends graft.QueryModule {
     * bounds the capacity-constrained regime separately. */
   def aggFreqTopk(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
-      .select(col("lang"), col("source"), explode(expr(
-        "filter(split(lower(text), ' '), x -> x <> '')")).as("token"))
+      .select(col("lang"), col("source"),
+        explode(graft.api.Text.tokenArray("text")).as("token"))
     graft.api.Sketch.freqTopkRollup(toks, "token",
         fine = Seq("lang", "source"), coarse = Seq("lang"), k = 10)
       .withColumnRenamed("item", "token")

@@ -32,8 +32,7 @@ object Pipeline31 extends graft.QueryModule {
     * non-edge words never mattered). */
   def textTextrank(s: SparkSession, dir: String): DataFrame = {
     val adj = Tables.documents(s, dir)
-      .select(expr("filter(split(lower(text), ' '), x -> x <> '')")
-        .as("ts"))
+      .select(graft.api.Text.tokenArray("text").as("ts"))
       .where(size(col("ts")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(ts) - 1)," +

@@ -27,7 +27,7 @@ object Pipeline41 extends graft.QueryModule {
     * (deg ≤ cap) against the stored pair list — never all-pairs;
     * the scale shape is q_graph_common_neighbors', audited clean. */
   def graphAdamicAdar(s: SparkSession, dir: String): DataFrame =
-    adamicAdarFrom(Pipeline23.undirected(s, dir).localCheckpoint(true))
+    adamicAdarFrom(TextOps.nearDupEdges(s, dir).localCheckpoint(true))
 
   /** AA core over any symmetric (src, dst) edge frame — split out so
     * Pipeline41Spec can pin weights on a synthetic wedge graph (the

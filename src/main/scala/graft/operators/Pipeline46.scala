@@ -53,8 +53,7 @@ object Pipeline46 extends graft.QueryModule {
   def textConcordance(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')")
-          .as("toks"))
+        graft.api.Text.tokenArray("text").as("toks"))
       .select(col("doc_id"), col("toks"),
         expr("size(toks)").as("n"), posexplode(col("toks")))
       .where(col("col").isin("spark", "join", "data"))
@@ -77,8 +76,7 @@ object Pipeline46 extends graft.QueryModule {
     * arithmetic on the cell frame. */
   def mlCalinskiHarabasz(s: SparkSession, dir: String): DataFrame = {
     val long = Tables.embeddings(s, dir)
-      .select(col("label"), posexplode(expr(
-        "transform(embedding, x -> cast(floor(x * 127.0D) as bigint))")))
+      .select(col("label"), posexplode(graft.api.Vec.q127("embedding")))
       .select(col("label"), col("pos").as("dim"), col("col").as("xi"))
       .localCheckpoint(true)
     val ss = long.agg(sum(expr("xi * xi"))).head.getLong(0)

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
 
 /** §2.64b round-14 batch 20 — evaluation-metric closers: the DeLong
   * AUC confidence interval (the uncertainty q_ml_auc's point
@@ -73,50 +72,16 @@ object Pipeline52 extends graft.QueryModule {
     * (pair, gram) equi-joins bounded by the stored candidate list —
     * never all-pairs. */
   def textBleuPairs(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-      .localCheckpoint(true)
-    // r16: only the candidate-pair docs' n-grams/lengths are ever
-    // consumed — restrict the corpus BEFORE tokenizing/exploding
-    // (broadcast semi-join on the tiny pair-doc set)
-    val pairDocs = pairs
-      .select(explode(array(col("d1"), col("d2"))).as("doc_id"))
-      .distinct()
-    val docToks = Tables.documents(s, dir)
-      .join(broadcast(pairDocs), "doc_id")
-      .select(col("doc_id"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
-    // n-grams assembled at the ARRAY level (one narrow pass per n) —
-    // a token-frame self-join on (doc, ord+1) would re-shuffle the
-    // exploded corpus just to look one element left
-    def grams(n: Int): DataFrame =
-      if (n == 1) docToks
-        .select(col("doc_id"), explode(col("toks")).as("gram"))
-      else docToks
-        .select(col("doc_id"), explode(expr(
-          "case when size(toks) < 2 then array()" +
-            " else transform(sequence(1, size(toks) - 1)," +
-            " i -> concat(toks[i - 1], ' ', toks[i])) end")).as("gram"))
-    def clipped(n: Int, name: String): DataFrame = {
-      val c = grams(n).groupBy("doc_id", "gram")
-        .agg(count(lit(1)).as("c")).localCheckpoint(true)
-      pairs
-        .join(c.select(col("doc_id").as("d1"), col("gram"),
-          col("c").as("ch")), Seq("d1"))
-        .join(c.select(col("doc_id").as("d2"), col("gram"),
-          col("c").as("cr")), Seq("d2", "gram"))
-        .groupBy("d1", "d2")
-        .agg(sum(expr("least(ch, cr)")).as(s"clip$name"))
-    }
-    val lens = docToks.select(col("doc_id"),
+    val pg = new TextOps.PairGrams(s, dir)
+    val lens = pg.docToks.select(col("doc_id"),
       expr("cast(size(toks) as bigint)").as("len"))
-    pairs
+    pg.pairs
       .join(lens.select(col("doc_id").as("d1"), col("len").as("c_len")),
         Seq("d1"))
       .join(lens.select(col("doc_id").as("d2"), col("len").as("r_len")),
         Seq("d2"))
-      .join(clipped(1, "1"), Seq("d1", "d2"), "left")
-      .join(clipped(2, "2"), Seq("d1", "d2"), "left")
+      .join(pg.clip(pg.counts(1), 1), Seq("d1", "d2"), "left")
+      .join(pg.clip(pg.counts(2), 2), Seq("d1", "d2"), "left")
       .select(col("d1"), col("d2"), col("c_len"), col("r_len"),
         coalesce(col("clip1"), lit(0L)).as("m1"),
         coalesce(col("clip2"), lit(0L)).as("m2"))

@@ -91,8 +91,7 @@ object Pipeline65 extends graft.QueryModule {
       .localCheckpoint(true)
     val norms = w.groupBy("doc_id")
       .agg(sum(expr("cast(w as decimal(38,0)) * w")).as("nrm"))
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
+    val pairs = TextOps.nearDupPairs(s, dir)
     val dots = pairs
       .join(w.select(col("doc_id").as("d1"), col("token"),
         col("w").as("w1")), "d1")

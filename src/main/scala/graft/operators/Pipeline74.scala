@@ -26,40 +26,10 @@ object Pipeline74 extends graft.QueryModule {
     * joins are (doc, gram) EQUI joins bounded by the stored pair
     * list — the q_text_bleu_pairs plan with a second denominator. */
   def textRougePairs(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-      .localCheckpoint(true)
-    // r16: only the candidate-pair docs' n-grams are ever consumed —
-    // restrict the corpus BEFORE tokenizing/exploding (broadcast
-    // semi-join on the tiny pair-doc set), so the gram tables carry
-    // ~|pair docs| documents instead of the whole corpus
-    val pairDocs = pairs
-      .select(explode(array(col("d1"), col("d2"))).as("doc_id"))
-      .distinct()
-    val docToks = Tables.documents(s, dir)
-      .join(broadcast(pairDocs), "doc_id")
-      .select(col("doc_id"),
-        expr("filter(split(lower(text), ' '), x -> x <> '')").as("toks"))
-    def grams(n: Int): DataFrame =
-      if (n == 1) docToks
-        .select(col("doc_id"), explode(col("toks")).as("gram"))
-      else docToks
-        .select(col("doc_id"), explode(expr(
-          "case when size(toks) < 2 then array()" +
-            " else transform(sequence(1, size(toks) - 1)," +
-            " i -> concat(toks[i - 1], ' ', toks[i])) end")).as("gram"))
-    def counts(n: Int): DataFrame = grams(n).groupBy("doc_id", "gram")
-      .agg(count(lit(1)).as("c")).localCheckpoint(true)
+    val pg = new TextOps.PairGrams(s, dir)
     def tot(c: DataFrame): DataFrame =
       c.groupBy("doc_id").agg(sum("c").as("t"))
-    def clip(c: DataFrame, n: Int): DataFrame = pairs
-      .join(c.select(col("doc_id").as("d1"), col("gram"),
-        col("c").as("ch")), Seq("d1"))
-      .join(c.select(col("doc_id").as("d2"), col("gram"),
-        col("c").as("cr")), Seq("d2", "gram"))
-      .groupBy("d1", "d2")
-      .agg(sum(expr("least(ch, cr)")).as(s"clip$n"))
-    val (c1, c2) = (counts(1), counts(2))
+    val (c1, c2) = (pg.counts(1), pg.counts(2))
     val (t1, t2) = (tot(c1), tot(c2))
     // gram totals join to pairs UNCONDITIONALLY (the oracle's t1/t2
     // join topology): a pair sharing zero unigrams still carries its
@@ -67,9 +37,9 @@ object Pipeline74 extends graft.QueryModule {
     // t1 joins are inner (every doc has >=1 unigram; a tokenless doc
     // would drop from the oracle's prs the same way); t2 stays left
     // (single-token docs have no bigrams).
-    pairs
-      .join(clip(c1, 1), Seq("d1", "d2"), "left")
-      .join(clip(c2, 2), Seq("d1", "d2"), "left")
+    pg.pairs
+      .join(pg.clip(c1, 1), Seq("d1", "d2"), "left")
+      .join(pg.clip(c2, 2), Seq("d1", "d2"), "left")
       .join(t1.select(col("doc_id").as("d1"), col("t").as("ct1")),
         Seq("d1"))
       .join(t1.select(col("doc_id").as("d2"), col("t").as("rt1")),

@@ -85,13 +85,11 @@ object Pipeline8 extends graft.QueryModule {
     * dup cluster, 3 fixed iterations, all-integer redistribution
     * (graft.api.Graph.pagerankMicro — deterministic on any engine,
     * partitioning or schedule). */
-  def graphPagerank(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.read(s, TextOps.fullPairs(s, dir))
-      .where(col("matches") >= 8).select("d1", "d2")
-    graft.api.Graph.pagerankMicro(pairs, "d1", "d2", iters = 3)
+  def graphPagerank(s: SparkSession, dir: String): DataFrame =
+    graft.api.Graph.pagerankMicro(TextOps.nearDupPairs(s, dir), "d1", "d2",
+        iters = 3)
       .select(col("node").as("doc_id"), col("rank_micro"))
       .orderBy("doc_id")
-  }
 
   /** The unrolled-CTE oracle for [[graphPagerank]] — the BPE-train
     * pattern: k fixed iterations generate k chained CTEs, each the

@@ -26,10 +26,7 @@ object Pipeline90 extends graft.QueryModule {
     * shuffle for a value already in hand). */
   def textKeyness(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = Tables.documents(s, dir)
-      .select(col("lang"),
-        explode(split(lower(col("text")), " ")).as("token"))
-      .where(col("token") =!= "")
+    val toks = graft.api.Text.tokens(Tables.documents(s, dir), "lang", "text")
     val cells = toks.groupBy("lang", "token").agg(count(lit(1)).as("k1"))
       .localCheckpoint(true)
     val tokTot = cells.groupBy("token").agg(sum("k1").as("kt"))

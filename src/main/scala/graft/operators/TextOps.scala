@@ -39,10 +39,8 @@ object TextOps extends graft.QueryModule {
     * join anywhere (guide §2.4). Same (source, token) multiset: the
     * join was on the explode's own doc_id. */
   private[operators] def sourceTokens(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("source"), posexplode(split(lower(col("text")), " ")))
-      .where(col("col") =!= "")
-      .select(col("source"), col("col").as("token"))
+    graft.api.Text.tokens(Tables.documents(s, dir), "source", "text")
+      .select(col("source"), col("token"))
 
   private val tokensSql =
     """SELECT doc_id, tokens[s] AS token
@@ -61,7 +59,7 @@ object TextOps extends graft.QueryModule {
     * computed double ratio is the §2.0.2 exact-half trap. */
   def textTokenize(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .withColumn("toks", expr("filter(split(lower(text), ' '), x -> x <> '')"))
+      .withColumn("toks", graft.api.Text.tokenArray("text"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
         expr("(1000000 * aggregate(toks, 0L, (a, x) -> a + length(x))) " +
@@ -86,11 +84,8 @@ object TextOps extends graft.QueryModule {
   /** NGram semantics: word bigrams, global top-50 frequencies. */
   def textNgram(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .withColumn("toks", expr("filter(split(lower(text), ' '), x -> x <> '')"))
-      .where(size(col("toks")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(toks)-1), i -> concat(toks[i-1], ' ', toks[i]))"))
-        .as("bigram"))
+      .withColumn("toks", graft.api.Text.tokenArray("text"))
+      .select(explode(graft.api.Text.ngrams("toks", 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("bigram").asc)
       .limit(50)
@@ -204,6 +199,58 @@ object TextOps extends graft.QueryModule {
       .write.mode("overwrite").parquet(out)
   }
 
+  /** The near-duplicate pair set: stored full pairs agreeing on >= 8
+    * of the 16 MinHash bands (the oracle's `Pipeline23.pairsHead`).
+    * Every near-dup graph and pair-metric key reads it. Output: (d1,
+    * d2), d1 < d2. */
+  private[graft] def nearDupPairs(s: SparkSession, dir: String): DataFrame =
+    Tables.read(s, fullPairs(s, dir))
+      .where(col("matches") >= 8).select("d1", "d2")
+
+  /** [[nearDupPairs]] as an undirected edge list: both directions of
+    * every pair. Output: (src, dst). */
+  private[operators] def nearDupEdges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = nearDupPairs(s, dir)
+    pairs.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+  }
+
+  /** The shared front of the pair n-gram metrics (q_text_bleu_pairs,
+    * q_text_rouge_pairs): the near-dup pairs, the token arrays of only
+    * the docs they mention, per-doc n-gram counts and the clipped
+    * per-pair overlap Σ min(count_d1, count_d2). The pairs and each
+    * count frame localCheckpoint (eager): each feeds several joins.
+    *
+    * 100 TB: r16 restricts the corpus to the pair docs BEFORE
+    * tokenizing (broadcast semi-join on the tiny pair-doc set), and
+    * the n-grams are assembled at the ARRAY level — a token-frame
+    * self-join on (doc, ord+1) would re-shuffle the exploded corpus
+    * just to look one element left. The clip joins are (pair, gram)
+    * equi-joins bounded by the stored pair list. */
+  private[operators] final class PairGrams(s: SparkSession, dir: String) {
+    val pairs: DataFrame = nearDupPairs(s, dir).localCheckpoint(true)
+    val docToks: DataFrame = Tables.documents(s, dir)
+      .join(broadcast(pairs
+        .select(explode(array(col("d1"), col("d2"))).as("doc_id"))
+        .distinct()), "doc_id")
+      .select(col("doc_id"), graft.api.Text.tokenArray("text").as("toks"))
+
+    /** (doc_id, gram, c) for the n-grams of each pair doc. */
+    def counts(n: Int): DataFrame = docToks
+      .select(col("doc_id"), explode(graft.api.Text.ngrams("toks", n)).as("gram"))
+      .groupBy("doc_id", "gram").agg(count(lit(1)).as("c"))
+      .localCheckpoint(true)
+
+    /** (d1, d2, clip<n>) for the pairs sharing at least one gram. */
+    def clip(c: DataFrame, n: Int): DataFrame = pairs
+      .join(c.select(col("doc_id").as("d1"), col("gram"),
+        col("c").as("ch")), Seq("d1"))
+      .join(c.select(col("doc_id").as("d2"), col("gram"),
+        col("c").as("cr")), Seq("d2", "gram"))
+      .groupBy("d1", "d2")
+      .agg(sum(expr("least(ch, cr)")).as(s"clip$n"))
+  }
+
   /** Full-corpus near-dup CLUSTER MAP (min-label connected components
     * over the >=8/16-band MinHash candidate pairs), STORED once per
     * (session, sfDir) — like the signatures, the map is a one-time
@@ -213,9 +260,7 @@ object TextOps extends graft.QueryModule {
     * move docs across train/test). Deterministic, so storing cannot
     * change any consumer's output. */
   private[graft] val fullCc = Store.files("full_cc") { (s, dir, out) =>
-    graft.api.Dedup.connectedComponents(
-        Tables.read(s, fullPairs(s, dir))
-          .where(col("matches") >= 8).select("d1", "d2"), "d1", "d2")
+    graft.api.Dedup.connectedComponents(nearDupPairs(s, dir), "d1", "d2")
       .write.mode("overwrite").parquet(out)
   }
 

@@ -40,6 +40,62 @@ class ApiSpec extends AnyFunSuite {
     assert(s5.where(col("id") === 1L).count() == 5)
   }
 
+  /** The tokenizer's edge inputs: null, empty, blank, runs of spaces,
+    * mixed-case non-ASCII and a tab (not a separator). */
+  private def edgeTexts = {
+    val sp = spark
+    import sp.implicits._
+    Seq[(Long, String)]((1L, null), (2L, ""), (3L, "   "),
+      (4L, "  Big  DATA "), (5L, "ÜBER  Çava"), (6L, "a\tB c"), (7L, "a  b"))
+      .toDF("id", "t")
+  }
+
+  test("Text.tokenArray equals the inline SQL tokenizer on edge inputs") {
+    val got = edgeTexts
+      .select(col("id"), api.Text.tokenArray("t").as("a"),
+        expr("filter(split(lower(t), ' '), x -> x <> '')").as("b"))
+      .orderBy("id").collect()
+    got.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](2),
+      s"id ${r.getLong(0)}"))
+    val arr = got.map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap
+    assert(arr(1L).isEmpty)
+    assert(arr(2L).contains(Seq()) && arr(3L).contains(Seq()))
+    assert(arr(4L).contains(Seq("big", "data")))
+    assert(arr(5L).contains(Seq("über", "çava")))
+    assert(arr(6L).contains(Seq("a\tb", "c")))
+  }
+
+  test("Text.tokens keeps the raw word ordinal and drops empties") {
+    val t = api.Text.tokens(edgeTexts, "id", "t")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(t.filter(_._1 == 7L) == Set((7L, 1L, "a"), (7L, 3L, "b")))
+    assert(t.filter(_._1 == 4L) == Set((4L, 3L, "big"), (4L, 5L, "data")))
+    assert(!t.exists(r => r._1 <= 3L), "null, empty and blank texts give no tokens")
+    assert(!t.exists(_._3.isEmpty))
+  }
+
+  test("Text.ngrams: arrays shorter than n give [], longer ones every window") {
+    val sp = spark
+    import sp.implicits._
+    val arrs = Seq(Seq[String](), Seq("a"), Seq("a", "b"), Seq("a", "b", "c"))
+      .zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "arr")
+    val bi = arrs.select(col("id"), api.Text.ngrams("arr", 2).as("g"))
+      .orderBy("id").collect().map(_.getSeq[String](1))
+    assert(bi.toSeq == Seq(Seq(), Seq(), Seq("a b"), Seq("a b", "b c")))
+    val tri = arrs.select(api.Text.ngrams("arr", 3).as("g"))
+      .orderBy(size(col("g"))).collect().map(_.getSeq[String](0))
+    assert(tri.toSeq == Seq(Seq(), Seq(), Seq(), Seq("a b c")))
+    val uni = arrs.where(col("id") === 3L)
+      .select(api.Text.ngrams("arr", 1)).head.getSeq[String](0)
+    assert(uni == Seq("a", "b", "c"))
+    // shingleArray is the distinct ngrams (caller keeps size >= k)
+    val rep = Seq(Tuple1(Seq("x", "y", "x", "y"))).toDF("arr")
+      .select(api.Text.ngrams("arr", 2), api.Dedup.shingleArray("arr", 2))
+      .head
+    assert(rep.getSeq[String](0) == Seq("x y", "y x", "x y"))
+    assert(rep.getSeq[String](1) == Seq("x y", "y x"))
+  }
+
   test("Dedup.exact + byContentMd5 agree: survivor=min, dup counted") {
     val e = api.Dedup.exact(docs, "id", Seq("body"))
     assert(e.count() == 3)

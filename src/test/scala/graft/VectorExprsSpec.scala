@@ -35,8 +35,12 @@ class VectorExprsSpec extends AnyFunSuite {
     val both = e.select(
       expr("graft_q127_sum(e)").as("native"),
       expr("aggregate(transform(e, x -> cast(floor(x * 127.0D) as bigint))," +
-        " 0L, (a, x) -> a + x)").as("hof"))
-    assert(both.where(col("native") =!= col("hof")).count() == 0)
+        " 0L, (a, x) -> a + x)").as("hof"),
+      // the graft.api.Vec helpers the embedding evals call
+      api.Vec.q127Sum("embedding").as("api"),
+      aggregate(api.Vec.q127("embedding"), lit(0L), _ + _).as("grid"))
+    assert(both.where(col("native") =!= col("hof") ||
+      col("api") =!= col("hof") || col("grid") =!= col("hof")).count() == 0)
     // edge semantics: null -> null, empty -> 0, negatives floor DOWN
     val r = spark.sql(
       """SELECT graft_q127_sum(CAST(NULL AS ARRAY<DOUBLE>)) AS n,
